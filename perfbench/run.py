@@ -49,6 +49,8 @@ def _isolate(work: str) -> None:
         os.makedirs(os.path.join(work, sub), exist_ok=True)
     os.environ["TMPDIR"] = os.path.join(work, "tmp")
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "local")
+    # every JVM the launch starts: no /tmp/hsperfdata_* files
+    os.environ["JAVA_TOOL_OPTIONS"] = "-XX:-UsePerfData"
 
 
 def _spark_conf(work: str) -> dict[str, str]:
@@ -329,6 +331,10 @@ def main() -> int:
             wl.close()
         _stop_spark(spark)
         shutil.rmtree(work, ignore_errors=True)
+        try:
+            os.rmdir(os.path.dirname(work))  # only when no other run uses it
+        except OSError:
+            pass
     print(json.dumps(result), flush=True)
     return 0
 

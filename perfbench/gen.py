@@ -28,6 +28,15 @@ SUBREDDITS = ["sydney", "melbourne", "brisbane", "perth"]
 _ONSETS = ["b", "c", "d", "f", "g", "k", "l", "m", "n", "p", "r", "s", "t", "v", "z"]
 _NUCLEI = ["a", "e", "i", "o", "u", "ai", "ou"]
 BASE_EPOCH = 1_704_067_200  # 2024-01-01T00:00:00Z
+VOCAB_SIZE = 3000
+ZIPF_S = 1.1
+# search_serve: an append or a delete at every WRITE_EVERY-th op, in
+# turn, so the op sequence repeats its kinds every 2 * WRITE_EVERY ops
+WRITE_EVERY = 5
+APPEND_DOCS = 20
+DELETE_DOCS = 5
+# ingest: redelivered submissions per page, as a share of the page size
+REDELIVER_P = 0.04
 
 
 def make_vocab(rng: random.Random, size: int) -> list[str]:
@@ -48,11 +57,11 @@ def make_vocab(rng: random.Random, size: int) -> list[str]:
 
 
 class Zipf:
-    """Draws words with probability proportional to 1 / rank**s."""
+    """Draws words with probability proportional to 1 / rank**ZIPF_S."""
 
-    def __init__(self, words: list[str], s: float = 1.1) -> None:
+    def __init__(self, words: list[str]) -> None:
         self.words = words
-        self.cum = list(itertools.accumulate(1.0 / (r**s) for r in range(1, len(words) + 1)))
+        self.cum = list(itertools.accumulate(1.0 / (r**ZIPF_S) for r in range(1, len(words) + 1)))
 
     def draw(self, rng: random.Random, k: int) -> list[str]:
         return rng.choices(self.words, cum_weights=self.cum, k=k)
@@ -91,49 +100,45 @@ class SearchInputs:
     ops: list[SearchOp]
 
 
-def search_inputs(
-    seed: int,
-    n_docs: int,
-    n_ops: int,
-    vocab_size: int = 3000,
-    write_every: int = 10,
-    append_docs: int = 20,
-    delete_docs: int = 5,
-) -> SearchInputs:
+def search_inputs(seed: int, n_docs: int, n_ops: int) -> SearchInputs:
     """An indexed corpus, the set-up writes that put the index in its
     serving shape (one appended batch, one tombstone batch), and a
     closed-loop op sequence: BM25 queries of 1-4 Zipf-drawn keywords,
-    with an append (new documents) or a delete (live ids) at every
-    ``write_every``-th position, alternating."""
+    with an append (new documents) or a delete at every
+    ``WRITE_EVERY``-th position, alternating.
+
+    Appends take fresh ids and deletes take corpus ids no other op
+    takes, so a run may skip ops of the sequence (its warm-up runs the
+    queries only, and its timed window starts at the start of a cycle)
+    and every later write still finds its ids new or live."""
     rng = random.Random(f"search:{seed}")
-    zipf = Zipf(make_vocab(rng, vocab_size))
+    zipf = Zipf(make_vocab(rng, VOCAB_SIZE))
     corpus = [(i, sentence(rng, zipf, 8, 60)) for i in range(n_docs)]
-    live = list(range(n_docs))
+    undeleted = list(range(n_docs))
     next_id = n_docs
 
     def append() -> SearchOp:
         nonlocal next_id
-        docs = [(next_id + j, sentence(rng, zipf, 8, 60)) for j in range(append_docs)]
-        next_id += append_docs
-        live.extend(d for d, _ in docs)
+        docs = [(next_id + j, sentence(rng, zipf, 8, 60)) for j in range(APPEND_DOCS)]
+        next_id += APPEND_DOCS
         return SearchOp("append", docs=docs)
 
     def delete() -> SearchOp:
-        nonlocal live
-        dead = sorted(rng.sample(live, delete_docs))
+        nonlocal undeleted
+        dead = sorted(rng.sample(undeleted, DELETE_DOCS))
         dead_set = set(dead)
-        live = [d for d in live if d not in dead_set]
+        undeleted = [d for d in undeleted if d not in dead_set]
         return SearchOp("delete", delete_ids=dead)
 
     setup = [append(), delete()]
     ops: list[SearchOp] = []
     for pos in range(1, n_ops + 1):
-        if pos % write_every:
+        if pos % WRITE_EVERY:
             # 1, 2, 3, 4 keywords in turn: every run gets the same mix of
             # query widths, so its median does not hinge on the seed
             ops.append(SearchOp("query", keywords=zipf.draw_distinct(rng, 1 + len(ops) % 4)))
         else:
-            ops.append(append() if (pos // write_every) % 2 else delete())
+            ops.append(append() if (pos // WRITE_EVERY) % 2 else delete())
     return SearchInputs(corpus, setup, ops)
 
 
@@ -196,15 +201,14 @@ def _submission(rng: random.Random, zipf: Zipf, n: int) -> FakeSubmission:
 class FakeRedditClient:
     """PRAW-shaped client: each ``search`` call returns the next page:
     ``page_size`` new submissions plus, at random positions, about
-    ``redeliver_p`` as many redeliveries of submissions from earlier
+    ``REDELIVER_P`` as many redeliveries of submissions from earlier
     pages (at-least-once delivery upstream of the harvester's
     seen-set)."""
 
-    def __init__(self, seed: int, page_size: int, redeliver_p: float = 0.04, vocab_size: int = 3000) -> None:
+    def __init__(self, seed: int, page_size: int) -> None:
         self.rng = random.Random(f"ingest:{seed}")
-        self.zipf = Zipf(make_vocab(self.rng, vocab_size))
+        self.zipf = Zipf(make_vocab(self.rng, VOCAB_SIZE))
         self.page_size = page_size
-        self.redeliver_p = redeliver_p
         self.delivered: list[FakeSubmission] = []
 
     def search(self, subreddit: str, term: str) -> list[FakeSubmission]:
@@ -212,7 +216,7 @@ class FakeRedditClient:
         fresh = [_submission(self.rng, self.zipf, earlier + j) for j in range(self.page_size)]
         page = list(fresh)
         if earlier:
-            n_old = max(1, round(self.redeliver_p * self.page_size))
+            n_old = max(1, round(REDELIVER_P * self.page_size))
             for s in self.rng.sample(self.delivered, n_old):
                 page.insert(self.rng.randrange(len(page) + 1), s)
         self.delivered.extend(fresh)

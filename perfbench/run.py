@@ -12,8 +12,9 @@ The last line of standard output is one JSON object:
 ``{"correct", "attempted", "failed", "metrics"}`` with the end-to-end
 metrics (``--trace 0``) or the per-layer metrics (``--trace 1``).  The
 line before it is a JSON detail record: sample counts, per-op-type
-percentiles, set-up breakdown and run provenance.  With ``--trace 1``
-the spans are written to ``.perfbench_out/`` in the checkout.
+percentiles, set-up breakdown, peak memory and run provenance.  With
+``--trace 1`` the spans are written to ``.perfbench_out/`` in the
+checkout.
 
 All scratch state lives under ``.perfbench_work/`` in the checkout and
 is removed at exit; the Spark JVM is stopped and waited for.
@@ -54,17 +55,13 @@ def _isolate(work: str) -> None:
 
 
 def _spark_conf(work: str) -> dict[str, str]:
+    """Scratch locations only; memory and every other setting are the
+    program's own defaults."""
     return {
-        "spark.driver.memory": "2g",
         "spark.ui.showConsoleProgress": "false",
         "spark.local.dir": os.path.join(work, "local"),
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-        # a fixed, pre-touched heap: peak RSS then reads the heap at its
-        # configured size and moves with off-heap and Python memory,
-        # not with when the collector chose to grow the heap
-        "spark.driver.extraJavaOptions": (
-            f"-Djava.io.tmpdir={os.path.join(work, 'tmp')} -Xms2g -XX:+AlwaysPreTouch"
-        ),
+        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}",
     }
 
 
@@ -121,7 +118,6 @@ class Run:
         self.attempted = 0
         self.failed = 0
         self.items = 0
-        self.primary_s = 0.0
         self.next_op = 0
 
     def _one(self, traced: bool):
@@ -131,6 +127,10 @@ class Run:
         i = self.next_op
         self.next_op += 1
         tr = self.tr if traced else Tracer(None, False)
+        if traced:
+            # per-layer probes of the op's layers, outside its span and
+            # its latency
+            self.wl.aside(i, tr)
         t0 = time.perf_counter()
         try:
             with tr.span("op", i) as span:
@@ -146,30 +146,39 @@ class Run:
         return kind, items, ok, ms
 
     def warm_up(self, window: int, tol: float, budget_s: float) -> None:
-        """Untimed ops until the primary-op latency has settled: the
-        median of the last ``window`` primary ops is no more than
-        ``tol`` below the median of the ``window`` before them.  Stops
-        early only if the time budget is spent."""
+        """Untimed primary ops until their latency has settled: the
+        median of the last ``window`` is no more than ``tol`` below the
+        median of the ``window`` before them.  Stops early only if the
+        time budget is spent.  Ops of other kinds are skipped, never
+        run: the workload's set-up has warmed their path."""
         from perfbench.stats import median
 
         t0 = time.perf_counter()
         while time.perf_counter() - t0 < budget_s:
+            if self.wl.kind_at(self.next_op) != self.wl.primary:
+                self.next_op += 1
+                continue
             kind, _items, ok, ms = self._one(False)
             self.attempted += 1
             self.failed += not ok
-            if kind != self.wl.primary:
+            if kind != self.wl.primary:  # an op that raised
                 continue
             self.warm.append(ms)
             if len(self.warm) >= 2 * window and median(self.warm[-window:]) >= (1 - tol) * median(
                 self.warm[-2 * window : -window]
             ):
                 break
+        # the window starts at the start of a cycle; the ops skipped to
+        # get there are never run
+        self.next_op += -self.next_op % self.wl.cycle
 
     def timed(self, seconds: float) -> float:
-        """The measured closed loop; with tracing on, every odd-numbered
-        op is traced, so traced and untraced latencies share one run."""
+        """The measured closed loop, in whole cycles of op kinds, for at
+        least ``seconds``; with tracing on, every odd-numbered op is
+        traced, so traced and untraced latencies share one run."""
         t0 = time.perf_counter()
-        while time.perf_counter() - t0 < seconds:
+        start = self.next_op
+        while (self.next_op - start) % self.wl.cycle or time.perf_counter() - t0 < seconds:
             traced = self.tr.enabled and self.next_op % 2 == 1
             kind, items, ok, ms = self._one(traced)
             self.attempted += 1
@@ -179,7 +188,6 @@ class Run:
             self.lat.add(kind, ms)
             if kind == self.wl.primary:
                 self.items += items
-                self.primary_s += ms / 1000.0
                 (self.traced_primary if traced else self.untraced_primary).append(ms)
         return time.perf_counter() - t0
 
@@ -191,11 +199,21 @@ class Run:
         for kind in self.wl.kinds:
             if kind in seen:
                 continue
-            # the next op of that kind at an odd index, where the window
-            # traces too
-            while self.wl.kind_at(self.next_op) != kind or self.next_op % 2 == 0:
+            # the ops skipped to get there are never run
+            while self.wl.kind_at(self.next_op) != kind:
                 self.next_op += 1
             _kind, _items, ok, _ms = self._one(True)
+            self.attempted += 1
+            self.failed += not ok
+
+    def trace_layers(self) -> None:
+        """After the window of a traced run: the workload's per-layer
+        ops, which split an op into its layers' calls, each materialised
+        in its own span; they are kept apart from the window's ops."""
+        for _ in range(self.wl.layer_ops):
+            ok = self.wl.layer_op(self.next_op, self.tr)
+            self.next_op += 1
+            self.tr.flush_counts()
             self.attempted += 1
             self.failed += not ok
 
@@ -248,15 +266,15 @@ def main() -> int:
         gc_ms = counters.gc_ms() - gc0
         if tracer.enabled:
             run.trace_missing_kinds()
+            run.trace_layers()
 
         t = time.perf_counter()
         checks, mismatches = wl.check()
         check_s = time.perf_counter() - t
         run.attempted += checks
         run.failed += mismatches
-        peak_mb = (
-            vm_hwm_kb(counters.jvm_pid()) + resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
-        ) / 1024.0
+        jvm_hwm_mb = vm_hwm_kb(counters.jvm_pid()) / 1024.0
+        driver_maxrss_mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
 
         primary = run.lat.samples(wl.primary)
         steal_end, ticks_end = _cpu_ticks()
@@ -283,6 +301,12 @@ def main() -> int:
                 "warmup_primary_ms": run.warm,
             },
             "window_s": window_s,
+            # detail only, not a bounded metric: with the program's own
+            # heap settings the JVM's peak follows when the collector
+            # chose to grow its heap, and its run-to-run spread is wider
+            # than any bound the benchmark may fix
+            "peak_rss_mb": jvm_hwm_mb + driver_maxrss_mb,
+            "peak_rss_parts_mb": {"jvm_vmhwm": jvm_hwm_mb, "driver_ru_maxrss": driver_maxrss_mb},
             "ops": run.lat.summary(),
             "ops_attempted": run.attempted,
             "ops_failed": run.failed,
@@ -306,9 +330,9 @@ def main() -> int:
         if not args.trace:
             metrics = {
                 "latency_p50_ms": (median(primary), "ms"),
-                # the one client's rate while busy with its primary op
-                "throughput_per_s": (run.items / run.primary_s, "1/s"),
-                "peak_rss_mb": (peak_mb, "MB"),
+                # primary-op items over the whole window, interleaved
+                # writes included, so a slower write path lowers it
+                "throughput_per_s": (run.items / window_s, "1/s"),
                 "setup_s": (setup_s, "s"),
             }
             detail["samples"] = {"latency_p50_ms": len(primary), "throughput_per_s": run.items}
@@ -356,7 +380,10 @@ def _layer_metrics(run: Run, tracer, wl, session_build_s: float, gc_ms: int) -> 
         {
             "spark.jobs_per_op": (fewest([s.jobs for s in ops]), "count"),
             "spark.tasks_per_op": (fewest([s.tasks for s in ops]), "count"),
-            "spark.failed_tasks": (sum(s.failed_tasks for s in tracer.named("op")), "count"),
+            "spark.failed_tasks": (
+                sum(s.failed_tasks for s in tracer.spans if s.parent is None),
+                "count",
+            ),
             "jvm.gc_ms": (gc_ms, "ms"),
             "session.build_s": (session_build_s, "s"),
             "trace.overhead_ms": (overhead, "ms"),

@@ -51,10 +51,22 @@ def test_ingest_pages_redeliver_a_few_earlier_ids():
 
 
 def test_search_ops_put_writes_at_fixed_positions():
-    ops = gen.search_inputs(1, n_docs=100, n_ops=40, write_every=10).ops
-    assert [i for i, o in enumerate(ops) if o.kind != "query"] == [9, 19, 29, 39]
-    assert [ops[i].kind for i in (9, 19)] == ["append", "delete"]
+    ops = gen.search_inputs(1, n_docs=100, n_ops=4 * gen.WRITE_EVERY).ops
+    w = gen.WRITE_EVERY
+    assert [i for i, o in enumerate(ops) if o.kind != "query"] == [w - 1, 2 * w - 1, 3 * w - 1, 4 * w - 1]
+    assert [ops[w - 1].kind, ops[2 * w - 1].kind] == ["append", "delete"]
     assert all(1 <= len(o.keywords) <= 4 for o in ops if o.kind == "query")
+
+
+def test_search_writes_never_share_ids():
+    """Each delete takes corpus ids no other op takes and each append
+    takes fresh ids, so skipping ops leaves every later write valid."""
+    inputs = gen.search_inputs(2, n_docs=100, n_ops=60)
+    ops = inputs.setup + inputs.ops
+    deleted = [d for o in ops for d in o.delete_ids]
+    appended = [d for o in ops for d, _ in o.docs]
+    assert len(deleted) == len(set(deleted)) and all(d < 100 for d in deleted)
+    assert len(appended) == len(set(appended)) and all(d >= 100 for d in appended)
 
 
 def test_percentile_refuses_too_few_samples_beyond():

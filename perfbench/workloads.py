@@ -8,6 +8,12 @@ workload object owns its inputs and on-disk state and exposes:
   streaming ingest of the analytics inputs);
 - ``op(i, tr)``  — run op ``i`` of the seeded sequence and return
   ``(kind, items, ok)``; ``tr`` is the run's tracer (a no-op when off);
+  a traced op makes the same calls as an untraced one;
+- ``aside(i, tr)`` — in a traced run, before traced op ``i`` and outside
+  its span: extra per-layer probes (say, a layer the op calls inside);
+- ``layer_op(i, tr)`` — in a traced run, after the window, ``layer_ops``
+  times: an op split into its layers' calls, each materialised in its
+  own span; returns whether its result is right;
 - ``check()``   — the output checks run after the timed window; returns
   ``(checks, failed)``: verification ops it ran itself, and how many of
   those or of the run's op results failed;
@@ -16,7 +22,9 @@ workload object owns its inputs and on-disk state and exposes:
 
 and the warm-up rule: ``warm_window`` primary ops compared with the
 ``warm_window`` before them must be within ``warm_tol``, spending at
-most ``warm_budget_s``.
+most ``warm_budget_s``.  The op kinds repeat every ``cycle`` ops; the
+timed window starts at the start of a cycle and ends at the end of one,
+so every window runs the same mix of op kinds.
 
 Only public functions of the program are called.
 """
@@ -25,6 +33,8 @@ from __future__ import annotations
 
 import os
 import random
+
+from pyspark.sql import functions as F
 
 from cloud_native_reddit_data_pipeline_spark.operators.search_index import (
     search_index_append,
@@ -85,15 +95,17 @@ class SearchServe:
     primary = "query"
     kinds = ("query", "append", "delete")
     warm_window, warm_tol, warm_budget_s = 4, 0.05, 30.0
+    cycle = 2 * gen.WRITE_EVERY
+    layer_ops = 0
     n_docs = 2000
     top_k = 10
-    check_queries = 3
+    check_queries = 2
 
     def __init__(self, spark, seed: int, workdir: str) -> None:
         self.spark = spark
         self.seed = seed
         self.index_dir = os.path.join(workdir, "search_index")
-        self.inputs = gen.search_inputs(seed, self.n_docs, n_ops=5000)
+        self.inputs = gen.search_inputs(seed, self.n_docs, n_ops=2000)
         self.live: dict[int, str] = {}
         self.snapshot: tuple = ()  # the live corpus, frozen at the last write
         self.answers: list[tuple] = []  # (keywords, result rows, snapshot)
@@ -109,15 +121,17 @@ class SearchServe:
     def kind_at(self, i: int) -> str:
         return self.inputs.ops[i].kind
 
+    def aside(self, i: int, tr) -> None:
+        """The query resolves the manifest itself; this extra call times
+        that layer on its own."""
+        if self.kind_at(i) == "query":
+            with tr.span("manifest.state", i):
+                manifest_state(self.spark, store_base(self.index_dir, "v1"))
+
     def op(self, i: int, tr):
         o = self.inputs.ops[i]
         if o.kind != "query":
             return o.kind, len(o.docs or o.delete_ids), self._write(o, i, tr)
-        if tr.enabled:
-            # the query resolves the manifest itself; this extra call,
-            # made in traced ops only, times that layer on its own
-            with tr.span("manifest.state", i):
-                manifest_state(self.spark, store_base(self.index_dir, "v1"))
         with tr.span("search.query", i, keywords=len(o.keywords)):
             rows = search_index_query(self.spark, self.index_dir, o.keywords, k=self.top_k).collect()
         self.answers.append((o.keywords, [tuple(r) for r in rows], self.snapshot))
@@ -320,6 +334,8 @@ class AnalyticsBatch:
     primary = "run_analytics"
     kinds = ("run_analytics",)
     warm_window, warm_tol, warm_budget_s = 1, 0.1, 40.0
+    cycle = 1
+    layer_ops = 1
     ingest_batches = 2
     page_size = 180
     k = 20
@@ -353,40 +369,41 @@ class AnalyticsBatch:
     def kind_at(self, i: int) -> str:
         return "run_analytics"
 
+    def aside(self, i: int, tr) -> None:
+        pass
+
     def op(self, i: int, tr):
-        if tr.enabled:
-            rows, names = self._traced_op(i, tr)
-        else:
-            analysis, names_df = run_analytics(self.posts, self.comments, k=self.k, batch_id=f"b{i}")
-            rows, names = analysis.collect(), names_df.collect()
+        analysis, names_df = run_analytics(self.posts, self.comments, k=self.k, batch_id=f"b{i}")
+        rows, names = analysis.collect(), names_df.collect()
         self.results.append((rows, names))
         return "run_analytics", len(rows), True
 
-    def _traced_op(self, i: int, tr):
+    def layer_op(self, i: int, tr) -> bool:
         """`run_analytics`'s steps called one by one, in its order, each
-        result materialised inside its own span."""
-        from pyspark.sql import functions as F
-
-        with tr.span("analytics.prepare_corpus", i):
-            corpus = (
-                prepare_corpus(self.posts, self.comments)
-                .withColumn("_doc", F.monotonically_increasing_id())
-                .localCheckpoint(eager=True)
-            )
-        with tr.span("sentiment.score_relational", i):
-            sent = score_relational(corpus, ["_doc"], "text").localCheckpoint(eager=True)
-        corpus_s = corpus.join(sent, "_doc")
-        with tr.span("topics.fit_topics", i):
-            model, transformed = fit_topics(corpus_s, id_col="_doc", text_col="text", k=self.k, seed=42)
-        with tr.span("topics.widen_topics", i):
-            wide = widen_topics(transformed, ["_doc"], k=self.k).localCheckpoint(eager=True)
-        with tr.span("topics.topic_names", i):
-            names = topic_names(model, top_n=10).withColumn("batch_id", F.lit(f"b{i}")).collect()
-        with tr.span("analytics.assemble", i):
-            rows = (
-                corpus_s.join(wide, "_doc").drop("_doc").withColumn("batch_id", F.lit(f"b{i}")).collect()
-            )
-        return rows, names
+        result materialised inside its own span; its result goes through
+        the same checks as the ops'."""
+        with tr.span("layers", i):
+            with tr.span("analytics.prepare_corpus", i):
+                corpus = (
+                    prepare_corpus(self.posts, self.comments)
+                    .withColumn("_doc", F.monotonically_increasing_id())
+                    .localCheckpoint(eager=True)
+                )
+            with tr.span("sentiment.score_relational", i):
+                sent = score_relational(corpus, ["_doc"], "text").localCheckpoint(eager=True)
+            corpus_s = corpus.join(sent, "_doc")
+            with tr.span("topics.fit_topics", i):
+                model, transformed = fit_topics(corpus_s, id_col="_doc", text_col="text", k=self.k, seed=42)
+            with tr.span("topics.widen_topics", i):
+                wide = widen_topics(transformed, ["_doc"], k=self.k).localCheckpoint(eager=True)
+            with tr.span("topics.topic_names", i):
+                names = topic_names(model, top_n=10).withColumn("batch_id", F.lit(f"b{i}")).collect()
+            with tr.span("analytics.assemble", i):
+                rows = (
+                    corpus_s.join(wide, "_doc").drop("_doc").withColumn("batch_id", F.lit(f"b{i}")).collect()
+                )
+        self.results.append((rows, names))
+        return True
 
     def check(self) -> tuple[int, int]:
         """The two ingest table checks of set-up, then the A4/A5 output

@@ -20,8 +20,11 @@ def materialize_and_release(out: DataFrame, *pinned: DataFrame) -> DataFrame:
     storage and is dropped by the ContextCleaner once the returned
     DataFrame is garbage-collected — unlike CacheManager entries, which
     survive until explicit unpersist.  Only use when `out` is small
-    relative to `pinned`: the full result is materialized."""
-    out = out.localCheckpoint(eager=True)
-    for p in pinned:
-        p.unpersist()
-    return out
+    relative to `pinned`: the full result is materialized.  The pins
+    are released even when the materialization throws, so a failed job
+    leaves no CacheManager entry behind."""
+    try:
+        return out.localCheckpoint(eager=True)
+    finally:
+        for p in pinned:
+            p.unpersist()

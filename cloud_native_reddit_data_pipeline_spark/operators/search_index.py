@@ -33,9 +33,9 @@ that module's docstring for the object-store-safe commit story):
   (the bucket hash is md5-based so the query side computes it in
   pure Python — no routing job), df comes from the pruned slice,
   dl rides IN the posting rows (no doclens read anywhere on the
-  serving path), and N/avgdl are ONE tiny sum over the stats log.
-  Query cost is proportional to the matched postings, never the
-  corpus.
+  serving path), and N/avgdl enter the plan as literals from the
+  reader snapshot (below).  Query cost is proportional to the matched
+  postings, never the corpus.
 - `search_index_query_fielded` — per-field BOOSTED BM25 off the
   store: the reference's literal production query is ES `multi_match`
   over ``["title", "selftext"]`` (`redditProcessor.py:67-70`), i.e. a
@@ -124,18 +124,38 @@ Layout under ``{index_dir}/{version}/``::
     _commits/    (seq BIGINT, gen INT, tomb_gen INT) — generation
                  manifest (shared protocol, storage/manifest.py)
 
+Reader snapshot: the four query verbs resolve the store through ONE
+process-wide cache keyed by store base (`_reader_snapshot`) — the
+searcher an ES node keeps open between index commits.  It holds
+_meta, the committed generation and N/avgdl, and every call validates
+it against a token of the file names a driver-side Hadoop-FS listing
+finds in ``_meta``, ``_commits`` and the current ``stats_gN`` (no
+Spark job; a few ms per directory).  Every write that changes that
+state adds or replaces a file there (build rewrites _meta, compact
+appends a commit, append and delete append a stats delta), so the
+cache needs no invalidation hook: a changed listing re-reads its
+component, and an unchanged store costs no read at all.  Each listing
+precedes its read, so a racing writer can only leave the token older
+than the state it guards — the next call then refreshes — and a stale
+state is never served.  The tombstone log is read afresh by every
+query.  Consistency rule of a query: its files are listed and N/avgdl
+fixed when the verb is CALLED, not when the returned frame is
+collected.
+
 Scale shape: the build is one tokenize pass (explode → map-side
 combined tf counts) plus a layout-controlled partitioned write; a
 query reads ≤ |keywords| bucket directories of the postings table and
-NOTHING else but the tiny stats log (dl is in the rows); fuzzy
-expansion reads the vocabulary-sized dictionary, never postings;
-appends cost the batch, never the corpus; every verb resolves
-manifest state once and loads the tombstone log once per call.
+the tombstone log — nothing else (dl is in the rows, N/avgdl are plan
+literals); fuzzy expansion reads the vocabulary-sized dictionary,
+never postings; appends cost the batch, never the corpus.  Every
+component is read with its fixed schema, so no read runs a
+footer-inference job.
 """
 
 from __future__ import annotations
 
 import hashlib
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -148,15 +168,23 @@ from ..storage.manifest import (
     local_rows_df as _local_rows,
     manifest_state as _state,
     max_files_per_leaf_dir as _max_files,
+    read_parquet_pinned as _read_pinned,
     repartition_for_layout as _layout,
     reset_version_dir as _reset_version_dir,
     run_concurrent as _run_concurrent,
     store_base as _base,
-    try_read_parquet as _try_read,
     verify_readable as _verify_readable,
 )
 
 DEFAULT_BUCKETS = 16
+
+# fixed component schemas: every read pins them, so none runs a
+# footer-inference job (postings: `_postings_ddl`)
+_META_DDL = "n_buckets int, analyzer string, positions boolean, title_len int"
+_DOCLENS_DDL = "doc_id long, dl long, dl_t long"
+_STATS_DDL = "n_docs long, sum_dl long, sum_dl_t long"
+_TERMS_DDL = "tb int, term string"
+_TOMBS_DDL = "doc_id long"
 
 
 class DuplicateIdsError(ValueError):
@@ -249,8 +277,19 @@ def _term_bucket_col(term, n_buckets: int):
     ).cast("int")
 
 
+def _read_component(spark: SparkSession, path: str, ddl: str) -> DataFrame:
+    """A store component read with its fixed schema, or an EMPTY frame
+    of that schema when the directory does not exist."""
+    df = _read_pinned(spark, path, ddl)
+    return df if df is not None else _local_rows(spark, ddl, [])
+
+
 def _meta(spark: SparkSession, base: str) -> tuple[int, str, bool, int]:
-    row = spark.read.parquet(f"{base}/_meta").collect()[0]
+    meta = _read_pinned(spark, f"{base}/_meta", _META_DDL)
+    rows = [] if meta is None else meta.collect()
+    if not rows:
+        raise FileNotFoundError(f"search_index: no index at {base} (no _meta)")
+    row = rows[0]
     return (
         int(row["n_buckets"]),
         str(row["analyzer"]),
@@ -324,23 +363,27 @@ def _postings_ddl(positions: bool) -> str:
 def _read_postings(
     spark: SparkSession, base: str, gen: int, positions: bool
 ) -> DataFrame:
-    """The postings table, or a correctly-typed EMPTY frame when the
-    directory holds no files yet — a partitionBy write of zero rows
-    produces no parquet files, so an index built on an empty (or
+    """The postings table with its fixed schema — a partitionBy write
+    of zero rows produces no parquet files, and such a directory reads
+    as an EMPTY frame, so an index built on an empty (or
     all-empty-text) corpus and then appended into continuously (the ES
-    'create empty, ingest forever' lifecycle) must not crash the
-    readers on schema inference."""
-    df = _try_read(spark, _postings_dir(base, gen))
-    if df is not None:
-        return df
-    return spark.createDataFrame([], _postings_ddl(positions))
+    'create empty, ingest forever' lifecycle) serves without special
+    cases."""
+    return _read_component(
+        spark, _postings_dir(base, gen), _postings_ddl(positions)
+    )
 
 
 def _read_terms(spark: SparkSession, base: str, gen: int) -> DataFrame:
-    df = _try_read(spark, _terms_dir(base, gen))
-    if df is not None:
-        return df
-    return spark.createDataFrame([], "tb int, term string")
+    return _read_component(spark, _terms_dir(base, gen), _TERMS_DDL)
+
+
+def _read_doclens(spark: SparkSession, base: str, gen: int) -> DataFrame:
+    return _read_component(spark, _doclens_dir(base, gen), _DOCLENS_DDL)
+
+
+def _read_stats(spark: SparkSession, base: str, gen: int) -> DataFrame:
+    return _read_component(spark, _stats_dir(base, gen), _STATS_DDL)
 
 
 def _tokenized(
@@ -433,8 +476,10 @@ def _tokenized(
 
 
 def _load_tombstones(spark: SparkSession, base: str, tomb_gen: int):
-    t = _try_read(spark, _tomb_dir(base, tomb_gen))
-    return None if t is None else t.distinct()
+    """The tombstone log, or None before the first delete of this
+    tombstone generation.  Not deduplicated: readers anti-join it or
+    count distinct ids, and a duplicate tombstone changes neither."""
+    return _read_pinned(spark, _tomb_dir(base, tomb_gen), _TOMBS_DDL)
 
 
 def _anti_tombstones(df: DataFrame, tombs, id_col: str) -> DataFrame:
@@ -532,7 +577,7 @@ def search_index_build(
         doclens.coalesce(files_per_partition).write.mode("overwrite").parquet(
             _doclens_dir(base, 0)
         )
-        dstats = _doclens_sums(spark.read.parquet(_doclens_dir(base, 0)))
+        dstats = _doclens_sums(_read_doclens(spark, base, 0))
         _write_stats_delta(
             spark,
             _stats_dir(base, 0),
@@ -558,51 +603,100 @@ def search_index_build(
 # ---------------------------------------------------------------------------
 # Query (BM25 serving)
 # ---------------------------------------------------------------------------
-def _pruned_postings(
-    spark: SparkSession,
-    base: str,
-    gen: int,
-    positions: bool,
-    n_buckets: int,
-    kws: list[str],
+# Reader snapshots by store base: (listing token, resolved state).
+# Hard-capped (reset on overflow) like _KW_ANALYZE_CACHE — a process
+# serving many stores re-resolves each in one refresh.  No lock: each
+# entry is stored as one tuple, so racing threads can at worst evict
+# or refresh an entry twice, never pair a token with another state.
+_SNAPSHOT_CACHE_MAX = 256
+
+
+class _Snapshot(NamedTuple):
+    n_buckets: int
+    analyzer: str
+    positions: bool
+    title_len: int
+    gen: int
+    tomb_gen: int
+    n: int  # live documents (N)
+    avgdl: float | None  # None on an empty store
+    avgdl_t: float | None
+    avgdl_b: float | None
+
+
+_SNAPSHOTS: dict[str, tuple[tuple, _Snapshot]] = {}
+
+
+def _listing(spark: SparkSession, path: str) -> tuple[str, ...]:
+    return tuple(sorted(_fs_list(spark, path)))
+
+
+def _reader_snapshot(spark: SparkSession, base: str) -> _Snapshot:
+    """(n_buckets, analyzer, positions, title_len, gen, tomb_gen, N,
+    avgdl, avgdl_t, avgdl_b) of the store at `base` — the one resolver
+    every query verb calls (module docstring: reader snapshot).
+
+    The token is the file names in ``_meta``, ``_commits`` and the
+    committed generation's stats log.  Each of the three is listed,
+    then re-read with its fixed schema only if its names changed since
+    the cached snapshot (parquet part names are unique per write, so
+    equal names mean equal contents); an unchanged store costs the
+    listings and no Spark job.  Each listing precedes its read, so a
+    racing writer can only leave the token older than the state stored
+    with it.  The tombstone log is not part of the state: every query
+    reads it afresh.
+
+    N/avgdl come from the additive stats log: one tiny sum, never a
+    corpus scan (the log holds one row per write since the last
+    compact, and maintain bounds that).  The body avgdl is derivable
+    because the positional field split partitions the raw tokens:
+    dl_t + dl_b = dl exactly, so sum_dl_b = sum_dl - sum_dl_t.  An
+    EMPTY store has N = 0 and NULL avgdls; its result set is empty, so
+    no score divides by them."""
+    meta_ls = _listing(spark, f"{base}/_meta")
+    commits_ls = _listing(spark, f"{base}/_commits")
+    token, snap = _SNAPSHOTS.get(base, ((None, None, None), None))
+    meta = snap[:4] if token[0] == meta_ls else _meta(spark, base)
+    if token[1] == commits_ls:
+        gen, tomb_gen = snap.gen, snap.tomb_gen
+    else:
+        gen, tomb_gen, _ = _state(spark, base)
+    stats_ls = _listing(spark, _stats_dir(base, gen))
+    if (commits_ls, stats_ls) == token[1:]:
+        stats = snap[6:]
+    else:
+        # one row per write since the last compact: summed on the
+        # driver, one scan job and no shuffle
+        rows = _read_stats(spark, base, gen).collect()
+        n, sdl, sdlt = (
+            sum(int(r[c] or 0) for r in rows)
+            for c in ("n_docs", "sum_dl", "sum_dl_t")
+        )
+        stats = (n,) + tuple(
+            float(t) / float(n) if n else None for t in (sdl, sdlt, sdl - sdlt)
+        )
+    new_token = (meta_ls, commits_ls, stats_ls)
+    if new_token == token:
+        return snap
+    snap = _Snapshot(*meta, gen, tomb_gen, *stats)
+    if len(_SNAPSHOTS) >= _SNAPSHOT_CACHE_MAX:
+        _SNAPSHOTS.clear()
+    _SNAPSHOTS[base] = (new_token, snap)
+    return snap
+
+
+def _live_postings(
+    spark: SparkSession, base: str, snap: _Snapshot, kws: list[str]
 ) -> DataFrame:
     """The serving scan: postings pruned ON DISK to the keywords' term
     buckets (bucket hash recomputed in pure Python — zero routing
-    jobs), then to the exact keyword set."""
-    buckets = sorted({term_bucket_py(w, n_buckets) for w in kws})
-    return _read_postings(spark, base, gen, positions).filter(
+    jobs), then to the exact keyword set, minus tombstoned docs."""
+    buckets = sorted({term_bucket_py(w, snap.n_buckets) for w in kws})
+    post = _read_postings(spark, base, snap.gen, snap.positions).filter(
         F.col("tb").isin(buckets) & F.col("term").isin(kws)
     )
-
-
-def _live_stats(spark: SparkSession, base: str, gen: int) -> DataFrame:
-    """(_n, _avgdl, _avgdl_t, _avgdl_b) from the additive stats log —
-    one tiny sum, never a corpus scan.  The body avgdl is derivable
-    because the positional field split partitions the raw tokens:
-    dl_t + dl_b = dl exactly, so sum_dl_b = sum_dl - sum_dl_t."""
-    return (
-        spark.read.parquet(_stats_dir(base, gen))
-        .agg(
-            F.sum("n_docs").alias("_n"),
-            F.sum("sum_dl").alias("_sdl"),
-            F.sum("sum_dl_t").alias("_sdlt"),
-        )
-        .select(
-            "_n",
-            # try_divide: an EMPTY store sums to _n = 0 (its one stats
-            # row is all zeros) — the result set is empty then, so a
-            # NULL avgdl never reaches a score, and ANSI mode must not
-            # abort the plan on 0/0
-            F.try_divide(F.col("_sdl").cast("double"), F.col("_n")).alias(
-                "_avgdl"
-            ),
-            F.try_divide(F.col("_sdlt").cast("double"), F.col("_n")).alias(
-                "_avgdl_t"
-            ),
-            F.try_divide(
-                (F.col("_sdl") - F.col("_sdlt")).cast("double"), F.col("_n")
-            ).alias("_avgdl_b"),
-        )
+    return _anti_tombstones(
+        post, _load_tombstones(spark, base, snap.tomb_gen), "doc_id"
     )
 
 
@@ -623,32 +717,28 @@ def search_index_query(
     buckets; dl rides IN the posting rows (Lucene's norms design —
     fsck pins postings.dl == doclens.dl, so no component of the score
     ever reads the corpus-proportional doclens table); N/avgdl come
-    from the additive stats log (one tiny sum); tombstoned docs never
+    from the reader snapshot as plan literals; tombstoned docs never
     appear and never contribute df."""
     base = _base(index_dir, version)
-    n_buckets, analyzer, _positions, title_len = _meta(spark, base)
-    if title_len > 0:
+    snap = _reader_snapshot(spark, base)
+    if snap.title_len > 0:
         raise FieldedStoreMismatchError(
             f"search_index_query: index at {index_dir} is FIELDED "
-            f"(title_len={title_len}) — its postings carry per-field tf/dl; "
-            f"use search_index_query_fielded"
+            f"(title_len={snap.title_len}) — its postings carry per-field "
+            f"tf/dl; use search_index_query_fielded"
         )
-    gen, tomb_gen, _ = _state(spark, base)
 
-    kws = _analyzed_kws(spark, [w.lower() for w in keywords], analyzer)
-    post = _pruned_postings(spark, base, gen, _positions, n_buckets, kws)
-    tombs = _load_tombstones(spark, base, tomb_gen)
-    post = _anti_tombstones(post, tombs, "doc_id")
-
-    st = _live_stats(spark, base, gen)
+    kws = _analyzed_kws(spark, [w.lower() for w in keywords], snap.analyzer)
+    post = _live_postings(spark, base, snap, kws)
     dfreq = post.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
     from .textstats import bm25_idf, bm25_tf_sat
 
-    idf = bm25_idf(F.col("_n"), F.col("df"))
-    tf_sat = bm25_tf_sat(F.col("tf"), F.col("dl"), F.col("_avgdl"), k1, b)
+    idf = bm25_idf(F.lit(snap.n).cast("long"), F.col("df"))
+    tf_sat = bm25_tf_sat(
+        F.col("tf"), F.col("dl"), F.lit(snap.avgdl).cast("double"), k1, b
+    )
     return (
         post.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(st))
         .groupBy("doc_id")
         .agg(
             F.sum("tf").alias("n_hits"),
@@ -682,43 +772,37 @@ def search_index_query_fielded(
     field-local tf and dl ride in the tagged posting rows, field df
     aggregates over the pruned slice per (fld, term), and the
     per-field avgdl comes from the stats log (sum_dl_t and
-    sum_dl - sum_dl_t over N).  The document score is the
-    boost-weighted sum of its field scores, rounded ONCE.  Boosts are
-    query-time parameters, exactly as in ES.  Scale shape identical to
-    `search_index_query`: bucket-pruned postings scan, broadcast
-    df/stats, no doclens read."""
+    sum_dl - sum_dl_t over N, via the reader snapshot).  The document
+    score is the boost-weighted sum of its field scores, rounded ONCE.
+    Boosts are query-time parameters, exactly as in ES.  Scale shape
+    identical to `search_index_query`: bucket-pruned postings scan,
+    broadcast df, N/avgdl as literals, no doclens read."""
     base = _base(index_dir, version)
-    n_buckets, analyzer, _positions, title_len = _meta(spark, base)
-    if title_len <= 0:
+    snap = _reader_snapshot(spark, base)
+    if snap.title_len <= 0:
         raise FieldedStoreMismatchError(
             f"search_index_query_fielded: index at {index_dir} is not "
             f"fielded — rebuild with title_len > 0 to tag postings with "
             f"their field"
         )
-    gen, tomb_gen, _ = _state(spark, base)
 
-    kws = _analyzed_kws(spark, [w.lower() for w in keywords], analyzer)
-    post = _pruned_postings(spark, base, gen, _positions, n_buckets, kws)
-    tombs = _load_tombstones(spark, base, tomb_gen)
-    post = _anti_tombstones(post, tombs, "doc_id")
-
-    st = _live_stats(spark, base, gen)
+    kws = _analyzed_kws(spark, [w.lower() for w in keywords], snap.analyzer)
+    post = _live_postings(spark, base, snap, kws)
     dfreq = post.groupBy("fld", "term").agg(
         F.countDistinct("doc_id").alias("df")
     )
     from .textstats import bm25_idf, bm25_tf_sat
 
     avgdl = F.when(
-        F.col("fld") == "t", F.col("_avgdl_t")
-    ).otherwise(F.col("_avgdl_b"))
+        F.col("fld") == "t", F.lit(snap.avgdl_t).cast("double")
+    ).otherwise(F.lit(snap.avgdl_b).cast("double"))
     boost = F.when(
         F.col("fld") == "t", F.lit(float(title_boost))
     ).otherwise(F.lit(float(body_boost)))
-    idf = bm25_idf(F.col("_n"), F.col("df"))
+    idf = bm25_idf(F.lit(snap.n).cast("long"), F.col("df"))
     tf_sat = bm25_tf_sat(F.col("tf"), F.col("dl"), avgdl, k1, b)
     return (
         post.join(F.broadcast(dfreq), ["fld", "term"])
-        .crossJoin(F.broadcast(st))
         .groupBy("doc_id")
         .agg(
             F.sum("tf").alias("n_hits"),
@@ -759,8 +843,7 @@ def search_index_query_fuzzy(
     and routes the postings scan through the same pure-Python bucket
     pruning as every other query."""
     base = _base(index_dir, version)
-    n_buckets, _analyzer, _positions, _title_len = _meta(spark, base)
-    gen, tomb_gen, _ = _state(spark, base)
+    snap = _reader_snapshot(spark, base)
 
     kws = sorted({w.lower() for w in keywords})
     out_ddl = "doc_id long, n_terms long, n_hits long"
@@ -776,7 +859,7 @@ def search_index_query_fuzzy(
     # the per-keyword length window + levenshtein — the scan form's
     # exact matching rule
     pairs = (
-        _read_terms(spark, base, gen)
+        _read_terms(spark, base, snap.gen)
         .select("term")
         .distinct()
         .filter(F.length("term").between(lo, hi))
@@ -791,11 +874,7 @@ def search_index_query_fuzzy(
     if not pairs:
         return spark.createDataFrame([], out_ddl)
     matched = sorted({r["term"] for r in pairs})
-    post = _pruned_postings(
-        spark, base, gen, _positions, n_buckets, matched
-    )
-    tombs = _load_tombstones(spark, base, tomb_gen)
-    post = _anti_tombstones(post, tombs, "doc_id")
+    post = _live_postings(spark, base, snap, matched)
     pair_df = _local_rows(
         spark,
         "term string, kw string",
@@ -841,30 +920,25 @@ def search_index_phrase_query(
     (the field split never renumbers tokens; a posting split across
     't'/'b' rows contributes all its raw positions)."""
     base = _base(index_dir, version)
-    n_buckets, analyzer, has_pos, _title_len = _meta(spark, base)
-    if not has_pos:
+    snap = _reader_snapshot(spark, base)
+    if not snap.positions:
         raise PositionsUnavailableError(
             f"search_index_phrase_query: index at {index_dir} was built "
             f"without positions=True — phrase verification needs the "
             f"per-occurrence position lists"
         )
-    gen, tomb_gen, _ = _state(spark, base)
 
     terms = [t.lower() for t in phrase_terms]
-    if analyzer != "exact":
+    if snap.analyzer != "exact":
         kdf = _local_rows(spark, "term string", [(w,) for w in terms])
         stem_of = {
             r["term"]: r["t"]
             for r in kdf.select(
-                "term", _analyze("term", analyzer).alias("t")
+                "term", _analyze("term", snap.analyzer).alias("t")
             ).collect()
         }
         terms = [stem_of[w] for w in terms]
-    post = _pruned_postings(
-        spark, base, gen, True, n_buckets, sorted(set(terms))
-    )
-    tombs = _load_tombstones(spark, base, tomb_gen)
-    post = _anti_tombstones(post, tombs, "doc_id")
+    post = _live_postings(spark, base, snap, sorted(set(terms)))
     flat = post.select(
         "doc_id", F.explode("pos").alias("pos"), F.col("term").alias("_t")
     )
@@ -919,7 +993,7 @@ def search_index_append(
         conflicts.append(tombs.select("doc_id", F.lit("dead").alias("_why")))
     if assert_unique:
         conflicts.append(
-            spark.read.parquet(_doclens_dir(base, gen)).select(
+            _read_doclens(spark, base, gen).select(
                 "doc_id", F.lit("live").alias("_why")
             )
         )
@@ -1016,28 +1090,35 @@ def search_index_delete(
     gen, tomb_gen, _ = _state(spark, base)
     tdir = _tomb_dir(base, tomb_gen)
 
-    req = _local_rows(
-        spark, "doc_id long", [(int(i),) for i in sorted(set(delete_ids))]
-    )
-    existing = _try_read(spark, tdir)
-    fresh = (
-        req
-        if existing is None
-        else req.join(existing.distinct(), "doc_id", "left_anti")
-    )
-    # dl/dl_t lookup for the genuinely-new dead ids (tombstone-sized
-    # broadcast semi-join against doclens)
-    dead = _doclens_sums(
-        spark.read.parquet(_doclens_dir(base, gen)).join(
-            F.broadcast(fresh), "doc_id", "semi"
-        )
-    )
-    n_new = int(dead["n"])
-    fresh_rows = [
-        (int(r["doc_id"]),) for r in fresh.collect()
-    ]  # bounded: ≤ |delete_ids|
+    req = sorted({int(i) for i in delete_ids})
+    existing = _load_tombstones(spark, base, tomb_gen)
+    n_existing, already = 0, set()
+    if existing is not None:
+        # ONE pass over the log: its distinct size (the receipt total is
+        # that plus the fresh ids, which are disjoint from it) and which
+        # requested ids it already holds
+        seen = existing.agg(
+            F.countDistinct("doc_id").alias("n"),
+            F.collect_set(
+                F.when(F.col("doc_id").isin(req), F.col("doc_id"))
+            ).alias("hit"),
+        ).first()
+        n_existing, already = int(seen["n"]), set(seen["hit"])
+    # bounded: ≤ |delete_ids|, reused below as literal rows
+    fresh_rows = [(i,) for i in req if i not in already]
+    n_new = 0
     if fresh_rows:
-        _local_rows(spark, "doc_id long", fresh_rows).coalesce(1).write.mode(
+        # dl/dl_t lookup for the genuinely-new dead ids (tombstone-sized
+        # broadcast semi-join against doclens)
+        dead = _doclens_sums(
+            _read_doclens(spark, base, gen).join(
+                F.broadcast(_local_rows(spark, _TOMBS_DDL, fresh_rows)),
+                "doc_id",
+                "semi",
+            )
+        )
+        n_new = int(dead["n"])
+        _local_rows(spark, _TOMBS_DDL, fresh_rows).coalesce(1).write.mode(
             "append"
         ).parquet(tdir)
         if n_new:
@@ -1048,14 +1129,11 @@ def search_index_delete(
                 -int(dead["s"] or 0),
                 -int(dead["st"] or 0),
             )
-    total = spark.read.parquet(tdir).distinct().count() if (
-        fresh_rows or existing is not None
-    ) else 0
     return _local_rows(
         spark,
         "n_tombstones_added long, n_tombstones_total long, "
         "n_live_docs_removed long",
-        [(len(fresh_rows), total, n_new)],
+        [(len(fresh_rows), n_existing + len(fresh_rows), n_new)],
     )
 
 
@@ -1097,7 +1175,7 @@ def search_index_compact(
         _read_postings(spark, base, gen, positions), tombs, "doc_id"
     )
     lens_live = _anti_tombstones(
-        spark.read.parquet(_doclens_dir(base, gen)), tombs, "doc_id"
+        _read_doclens(spark, base, gen), tombs, "doc_id"
     )
     post_ids = post_live.select("doc_id").distinct()
     # heal: keep doclens rows that are either empty docs (dl = 0, no
@@ -1126,7 +1204,7 @@ def search_index_compact(
         # store with doubled N/sum_dl — clear the target first so the
         # retry is idempotent like the three overwrite components
         _fs_delete(spark, _stats_dir(base, new_gen))
-        dstats = _doclens_sums(spark.read.parquet(_doclens_dir(base, new_gen)))
+        dstats = _doclens_sums(_read_doclens(spark, base, new_gen))
         _write_stats_delta(
             spark,
             _stats_dir(base, new_gen),
@@ -1225,7 +1303,7 @@ def search_index_fsck(
     n_buckets, _analyzer_name, has_pos, title_len = _meta(spark, base)
     gen, tomb_gen, _ = _state(spark, base)
     post = _read_postings(spark, base, gen, has_pos)
-    lens = spark.read.parquet(_doclens_dir(base, gen))
+    lens = _read_doclens(spark, base, gen)
 
     pids = post.select("doc_id").distinct()
     lids = lens.select("doc_id")
@@ -1290,7 +1368,7 @@ def search_index_fsck(
         )
     d = _doclens_sums(lens)
     s = (
-        spark.read.parquet(_stats_dir(base, gen))
+        _read_stats(spark, base, gen)
         .agg(
             F.sum("n_docs").alias("n"),
             F.sum("sum_dl").alias("s"),
@@ -1413,7 +1491,7 @@ def search_index_maintain(
     base = _base(index_dir, version)
     _, _, _has_pos, _title_len = _meta(spark, base)
     gen, tomb_gen, _ = _state(spark, base)
-    lens = spark.read.parquet(_doclens_dir(base, gen))
+    lens = _read_doclens(spark, base, gen)
     pids = _read_postings(spark, base, gen, _has_pos).select("doc_id")
     torn = (
         lens.filter(F.col("dl") > 0)
@@ -1422,9 +1500,9 @@ def search_index_maintain(
     )
     tombs = _load_tombstones(spark, base, tomb_gen)
     n_docs = lens.count()
-    n_dead = 0 if tombs is None else tombs.count()
+    n_dead = 0 if tombs is None else tombs.distinct().count()
     dead_ratio = n_dead / max(n_docs, 1)
-    stats_df = spark.read.parquet(_stats_dir(base, gen))
+    stats_df = _read_stats(spark, base, gen)
     stats_rows = stats_df.count()
     s = stats_df.agg(
         F.sum("n_docs").alias("n"),

@@ -32,7 +32,8 @@ The protocol (the Iceberg/Delta commit pattern, miniaturized):
   believes it committed (the optimistic-concurrency check Delta/Iceberg
   perform at their commit point; here detect-and-fail, no retry loop).
 
-Existence checks resolve by ATTEMPTING reads (`try_read_parquet`),
+Existence checks go through the Hadoop FileSystem API (`fs_list`,
+`read_parquet_pinned`) or by ATTEMPTING reads (`try_read_parquet`),
 never by local-filesystem stats, so visibility is identical across
 file://, hdfs:// and s3a:// schemes.
 """
@@ -62,12 +63,15 @@ def store_base(index_dir: str, version: str) -> str:
 
 
 def try_read_parquet(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read parquet at `path`, or None if it does not exist — resolved
-    by ATTEMPTING the read (AnalysisException), never by a local
-    filesystem stat, so tombstone/manifest visibility is identical on
-    file://, hdfs:// and s3a:// store dirs.  Schema resolution is
-    forced (driver-side file listing + footer read), but no Spark job
-    runs and no data pages are scanned."""
+    """Read parquet at `path` with its schema INFERRED, or None if it
+    does not exist or holds no data files — resolved by ATTEMPTING the
+    read (AnalysisException), never by a local filesystem stat, so
+    visibility is identical on file://, hdfs:// and s3a:// store dirs.
+    Schema resolution is forced: a driver-side file listing plus a
+    footer read, which Spark runs as a one-task job (``parquet at
+    <unknown>:0``, ~25-30 ms); no data pages are scanned.  Readers that
+    know a component's schema use `read_parquet_pinned` instead, which
+    runs no job."""
     from pyspark.errors import AnalysisException
 
     try:
@@ -76,6 +80,24 @@ def try_read_parquet(spark: SparkSession, path: str) -> DataFrame | None:
         return df
     except AnalysisException:
         return None
+
+
+def read_parquet_pinned(
+    spark: SparkSession, path: str, schema_ddl: str
+) -> DataFrame | None:
+    """Read parquet at `path` with a FIXED schema, or None if the path
+    does not exist — existence comes from the Hadoop FileSystem API (any
+    scheme), so a missing path raises and logs nothing.  With the schema
+    given, Spark lists the files on the driver and runs no footer-
+    inference job; a directory with no data files reads as an empty
+    frame (use `verify_readable` where that must count as unreadable).
+    Partition columns of a ``partitionBy`` layout go in the DDL like any
+    other column."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    if not p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p):
+        return None
+    return spark.read.schema(schema_ddl).parquet(path)
 
 
 def fs_delete(spark: SparkSession, path: str) -> None:
@@ -203,22 +225,31 @@ def local_rows_df(spark: SparkSession, schema_ddl: str, rows: list) -> DataFrame
     return empty.unionByName(lit_rows)
 
 
+_COMMITS_DDL = "seq long, gen int, tomb_gen int"
+
+
 def manifest_state(spark: SparkSession, base: str) -> tuple[int, int, int]:
     """(gen, tomb_gen, seq) of the current committed generation — the
     max-seq row of the ``_commits`` manifest, or (0, 0, -1) for a
-    freshly-built store (no manifest yet).  One tiny Spark job (the
-    manifest is one row per commit).  Resolution is DETERMINISTIC even
+    freshly-built store (no manifest yet, or only the file-less
+    directory a crashed first commit leaves).  A missing manifest is
+    found by a driver-side existence check (no Spark job, no
+    exception); an existing one is read with its fixed schema in one
+    tiny Spark job (the manifest is one row per commit).  Resolution is DETERMINISTIC even
     if two racing writers landed the same seq (a violated single-writer
     assumption): ties break to the highest ``gen``, then ``tomb_gen`` —
     never parquet file order — so every reader resolves the same
     winner; `append_commit`'s post-append check makes the losing
     writer raise."""
-    commits = try_read_parquet(spark, f"{base}/_commits")
+    commits = read_parquet_pinned(spark, f"{base}/_commits", _COMMITS_DDL)
     if commits is None:
         return 0, 0, -1
-    row = commits.orderBy(
+    rows = commits.orderBy(
         F.desc("seq"), F.desc("gen"), F.desc("tomb_gen")
-    ).limit(1).collect()[0]
+    ).limit(1).collect()
+    if not rows:
+        return 0, 0, -1
+    row = rows[0]
     return int(row["gen"]), int(row["tomb_gen"]), int(row["seq"])
 
 
@@ -240,11 +271,12 @@ def append_commit(
     duplicate row with identical coordinates (an idempotent retry of
     the same commit) is not a conflict."""
     local_rows_df(
-        spark, "seq long, gen int, tomb_gen int", [(seq, gen, tomb_gen)]
+        spark, _COMMITS_DDL, [(seq, gen, tomb_gen)]
     ).coalesce(1).write.mode("append").parquet(f"{base}/_commits")
     rivals = [
         (int(r["gen"]), int(r["tomb_gen"]))
-        for r in spark.read.parquet(f"{base}/_commits")
+        for r in spark.read.schema(_COMMITS_DDL)
+        .parquet(f"{base}/_commits")
         .filter(F.col("seq") == seq)
         .select("gen", "tomb_gen")
         .distinct()
@@ -389,6 +421,9 @@ def verify_readable(spark: SparkSession, *paths: str) -> list[str]:
     about to commit must each resolve to a readable parquet dataset
     (a fully-tombstoned compaction writes FILE-LESS dirs — committing
     those would brick the store once the old generation is GC'd).
-    Returns the unreadable paths (empty = safe to commit).  Cost is
-    driver-side schema resolution only — no Spark job, no data scan."""
+    Returns the unreadable paths (empty = safe to commit).  It keeps
+    schema INFERENCE on purpose: a pinned-schema read of a file-less
+    directory succeeds as an empty frame, which would pass the gate.
+    Cost per path is a driver-side listing plus one footer-inference
+    job (one task, ~25-30 ms); no data pages are scanned."""
     return [p for p in paths if try_read_parquet(spark, p) is None]

@@ -13,6 +13,8 @@
   (PartitionFilters in the scan, not a post-scan filter)
 - maintain is idempotent and receipt-honest
 - no persist pin survives any verb (cache-idle gate)
+- the cached reader snapshot follows every write verb and a store
+  swapped on disk, and a warm query keeps to its Spark-job budget
 """
 
 from __future__ import annotations
@@ -676,3 +678,127 @@ def test_empty_docs_count_toward_stats(spark, tmp_path):
     assert got == want  # N = 3 and avgdl include the empty doc
     fs = si.search_index_fsck(spark, idx).collect()[0]
     assert fs["n_docs"] == 3 and fs["stats_match"] and fs["tokens_covered"]
+
+
+def _query_matches_scan(spark, idx, corpus) -> None:
+    got = _rows(si.search_index_query(spark, idx, KW, k=20))
+    want = _rows(ranked_keyword_search_bm25(corpus, "doc_id", "text", KW, k=20))
+    assert got == want
+
+
+def test_snapshot_follows_every_write_verb(spark, docs, tmp_path):
+    """A query after each write verb — append, delete, compact, gc and
+    an in-place rebuild — answers like the corpus-scan ranker over the
+    live corpus of that moment: the cached reader snapshot is never
+    served stale."""
+    idx = str(tmp_path / "six")
+    live = docs.filter("doc_id % 4 != 3")
+    si.search_index_build(live, idx).collect()
+    _query_matches_scan(spark, idx, live)
+    si.search_index_append(spark, docs.filter("doc_id % 4 = 3"), idx)
+    _query_matches_scan(spark, idx, docs)
+    dels = [
+        int(r["doc_id"])
+        for r in si.search_index_query(spark, idx, KW, k=3).collect()
+    ]
+    si.search_index_delete(spark, idx, dels).collect()
+    live = docs.filter(~F.col("doc_id").isin(dels))
+    _query_matches_scan(spark, idx, live)
+    si.search_index_compact(spark, idx).collect()
+    _query_matches_scan(spark, idx, live)
+    assert si.search_index_gc(spark, idx)
+    _query_matches_scan(spark, idx, live)
+    rebuilt = docs.filter("doc_id % 2 = 0")
+    si.search_index_build(rebuilt, idx).collect()
+    _query_matches_scan(spark, idx, rebuilt)
+
+
+def test_snapshot_sees_store_swapped_on_disk(spark, docs, tmp_path):
+    """Invalidation comes from the directory listing, not from a hook
+    in the write verbs: replacing a store's files behind the verbs'
+    back (another store copied over it) is seen by the next query."""
+    import shutil
+
+    even, odd = docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1")
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    si.search_index_build(even, a).collect()
+    si.search_index_build(odd, b).collect()
+    si.search_index_delete(spark, b, [1, 3]).collect()
+    _query_matches_scan(spark, a, even)
+    shutil.rmtree(f"{a}/v1")
+    shutil.copytree(f"{b}/v1", f"{a}/v1")
+    _query_matches_scan(spark, a, odd.filter(~F.col("doc_id").isin(1, 3)))
+
+
+def test_warm_query_job_budget(spark, docs, tmp_path):
+    """Job budget of the serving path on a store with tombstones: a
+    query on an unchanged store runs at most 6 Spark jobs and none of
+    them is a parquet schema-inference job (every component is read
+    with its fixed schema; N/avgdl are plan literals)."""
+    idx = str(tmp_path / "six")
+    si.search_index_build(docs.filter("doc_id % 4 != 3"), idx).collect()
+    si.search_index_append(spark, docs.filter("doc_id % 4 = 3"), idx)
+    si.search_index_delete(spark, idx, [1, 2, 3]).collect()
+    si.search_index_query(spark, idx, KW, k=20).collect()  # resolves
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("search-query-budget", "warm query job audit")
+    try:
+        si.search_index_query(spark, idx, KW, k=20).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = set(tracker.getJobIdsForGroup("search-query-budget") or [])
+    assert 0 < len(jobs) <= 6, f"warm query ran {len(jobs)} jobs"
+    stage_names = [
+        info.name
+        for j in jobs
+        for s in tracker.getJobInfo(j).stageIds
+        if (info := tracker.getStageInfo(s)) is not None
+    ]
+    assert not [n for n in stage_names if n.startswith("parquet at")], stage_names
+
+
+def test_snapshot_cache_under_thread_stress(spark, tmp_path, monkeypatch):
+    """The process-wide snapshot cache is shared by every thread: with
+    more threads than cores, a short switch interval, and a cap of one
+    entry (two stores evict each other on every call), each resolution
+    still returns its own store's state and none fails."""
+    import sys
+    import threading
+
+    small = [(1, "spark join"), (2, "spark"), (3, "")]
+    big = small + [(4, "join stream window"), (5, "window")]
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    for rows, idx in ((small, a), (big, b)):
+        si.search_index_build(
+            spark.createDataFrame(rows, "doc_id long, text string"), idx
+        ).collect()
+    bases = [f"{a}/v1", f"{b}/v1"]
+    want = {base: si._reader_snapshot(spark, base) for base in bases}
+    assert [want[base].n for base in bases] == [3, 5]
+    monkeypatch.setattr(si, "_SNAPSHOT_CACHE_MAX", 1)
+    wrong: list = []
+
+    def worker(k: int) -> None:
+        try:
+            for i in range(4):
+                base = bases[(k + i) % 2]
+                got = si._reader_snapshot(spark, base)
+                if got != want[base]:
+                    wrong.append((base, got))
+        except Exception as e:  # noqa: BLE001 — recorded and asserted below
+            wrong.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(k,)) for k in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads), "resolver thread hung"
+    assert not wrong, wrong[:3]

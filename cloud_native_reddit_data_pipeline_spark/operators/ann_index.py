@@ -49,13 +49,16 @@ Layout under ``{index_dir}/{version}/``::
                    manifest (see below); absent until the first
                    compaction / tombstone rewrite
 
-**Object-store-safe commits.**  The generation-manifest protocol lives
-in `storage/manifest.py` (shared verbatim with the dedup index and the
-snapshot store, and unit-tested there): compaction writes a brand-new
-generation directory, commits with ONE ``_commits`` row append, and
-readers resolve max-seq — never a rename on the read path, so a crash
-at any point leaves readers on a complete generation, on local disk
-and object stores alike.  Single writer per index version assumed.
+**Object-store-safe commits.**  The generation-manifest protocol and
+its toolkit live in `storage/manifest.py` (shared with the search and
+dedup indexes and the snapshot store, and unit-tested there):
+generation and tombstone directory names, the delete log and its
+anti-join, the append id guard, the commit gate and GC.  Compaction
+writes a brand-new generation directory, commits with ONE
+``_commits`` row append, and readers resolve max-seq — never a rename
+on the read path, so a crash at any point leaves readers on a complete
+generation, on local disk and object stores alike.  Single writer per
+index version assumed.
 
 Scale shape: the build is the fused form's first half (one broadcast
 centroid scoring pass + one partitionBy write — the shuffle is the
@@ -88,17 +91,22 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine
 from ..storage.manifest import (
-    append_commit as _append_commit,
-    fs_delete as _fs_delete,
-    fs_list as _fs_list,
+    anti_tombstones as _anti_tombstones,
+    append_tombstones as _append_tombstones,
+    commit_generation as _commit_generation,
+    count_tombstones as _count_tombstones,
+    gc_generations as _gc_generations,
+    gen_dir as _gen_dir,
+    guard_hits as _id_guard,
+    load_tombstones as _load_tombstones,
     local_rows_df as _local_rows,
     manifest_state as _state,
+    max_files_per_leaf_dir as _max_files,
     repartition_for_layout as _layout,
     reset_version_dir as _reset_version_dir,
     run_concurrent as _run_concurrent,
     store_base as _base,
-    try_read_parquet as _try_read,
-    verify_readable as _verify_readable,
+    tomb_dir as _tomb_dir,
 )
 from .clustering import _quantize as _pq_quantize
 from .similarity import _pq_encode_df, _pq_seed_codebook
@@ -134,6 +142,10 @@ def _assign_cells(scored: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     )
 
 
+# generation-addressed components (storage/manifest.gen_dir)
+_COMPONENTS = ("cells", "codes")
+
+
 def _quantize_keep_cell(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """`clustering._quantize` with the ``cell`` column riding along, so
     the PQ encode's output can be written straight into the
@@ -149,22 +161,6 @@ def _quantize_keep_cell(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     )
 
 
-def _cells_dir(base: str, gen: int) -> str:
-    return f"{base}/cells" if gen == 0 else f"{base}/cells_g{gen}"
-
-
-def _codes_dir(base: str, gen: int) -> str:
-    return f"{base}/codes" if gen == 0 else f"{base}/codes_g{gen}"
-
-
-def _tomb_dir(base: str, tomb_gen: int) -> str:
-    return (
-        f"{base}/tombstones"
-        if tomb_gen == 0
-        else f"{base}/tombstones_t{tomb_gen}"
-    )
-
-
 def resolve_dirs(
     spark: SparkSession, index_dir: str, version: str = "v1"
 ) -> dict[str, str]:
@@ -175,8 +171,8 @@ def resolve_dirs(
     gen, tomb_gen, _ = _state(spark, base)
     return {
         "centroids": f"{base}/centroids",
-        "cells": _cells_dir(base, gen),
-        "codes": _codes_dir(base, gen),
+        "cells": _gen_dir(base, "cells", gen),
+        "codes": _gen_dir(base, "codes", gen),
         "codebook": f"{base}/codebook",
         "tombstones": _tomb_dir(base, tomb_gen),
     }
@@ -342,32 +338,17 @@ def ann_index_append(
     the PQ encode is the same narrow broadcast-codebook map."""
     base = _base(index_dir, version)
     gen, tomb_gen, _ = _state(spark, base)
-    cells_dir, codes_dir = _cells_dir(base, gen), _codes_dir(base, gen)
+    cells_dir = _gen_dir(base, "cells", gen)
+    codes_dir = _gen_dir(base, "codes", gen)
     cents = spark.read.parquet(f"{base}/centroids")
 
     new_ids = new_vecs.select(F.col(id_col).alias("vec_id")).distinct()
-    tombs = _load_tombstones(spark, base, tomb_gen)
-    conflicts = []
-    if tombs is not None:
-        conflicts.append(tombs.select("vec_id", F.lit("dead").alias("_why")))
-    if assert_unique:
-        conflicts.append(
-            spark.read.parquet(cells_dir)
-            .select(F.col(id_col).alias("vec_id"), F.lit("live").alias("_why"))
-        )
-    def _guard_hits() -> dict:
-        if not conflicts:
-            return {}
-        existing = conflicts[0]
-        for c in conflicts[1:]:
-            existing = existing.unionByName(c)
-        return {
-            r["_why"]: r["n"]
-            for r in existing.join(F.broadcast(new_ids), "vec_id", "semi")
-            .groupBy("_why")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+    tombs = _load_tombstones(spark, base, tomb_gen, "vec_id")
+    live_ids = (
+        spark.read.parquet(cells_dir).select(F.col(id_col).alias("vec_id"))
+        if assert_unique
+        else None
+    )
 
     scored = new_vecs.select(id_col, vec_col).crossJoin(F.broadcast(cents)).select(
         F.col(id_col),
@@ -385,7 +366,7 @@ def ann_index_append(
     # overlap; store writes start only after both finish and the guard
     # passes, so nothing is ever written for a rejected batch.
     hits, assigned = _run_concurrent(
-        _guard_hits,
+        lambda: _id_guard(new_ids, tombs, live_ids, "vec_id"),
         lambda: _assign_cells(scored, id_col, vec_col).localCheckpoint(
             eager=True
         ),
@@ -440,38 +421,18 @@ def ann_index_delete(
     every probe anti-joins it (the broadcast is tombstone-sized).
     Space is reclaimed by the NEXT `ann_index_compact`, whose fresh
     generation starts with an empty delete log — the LSM delete story.
-    Returns the one-row (n_tombstones_added, n_tombstones_total)
-    receipt."""
+    Only ids the log does not hold yet are appended, so a repeated
+    delete adds nothing.  Returns the one-row (n_tombstones_added,
+    n_tombstones_total) receipt."""
     base = _base(index_dir, version)
     _, tomb_gen, _ = _state(spark, base)
-    tdir = _tomb_dir(base, tomb_gen)
-    _local_rows(
-        spark, "vec_id long", [(int(i),) for i in delete_ids]
-    ).coalesce(1).write.mode("append").parquet(tdir)
-    total = spark.read.parquet(tdir).distinct().count()
+    fresh, total = _append_tombstones(
+        spark, base, tomb_gen, "vec_id", delete_ids
+    )
     return _local_rows(
         spark,
         "n_tombstones_added long, n_tombstones_total long",
-        [(len(delete_ids), total)],
-    )
-
-
-def _load_tombstones(spark: SparkSession, base: str, tomb_gen: int):
-    """The tombstone log as a distinct-id frame, or None when the log
-    is empty.  Each verb loads this ONCE and threads the frame through
-    every anti-join it performs."""
-    t = _try_read(spark, _tomb_dir(base, tomb_gen))
-    return None if t is None else t.distinct()
-
-
-def _anti_tombstones(df: DataFrame, tombs, id_col: str) -> DataFrame:
-    """Drop rows whose `id_col` is in the (pre-loaded) tombstone frame."""
-    if tombs is None:
-        return df
-    return df.join(
-        F.broadcast(tombs.withColumnRenamed("vec_id", "_dead")),
-        df[id_col] == F.col("_dead"),
-        "left_anti",
+        [(len(fresh), total)],
     )
 
 
@@ -510,13 +471,13 @@ def ann_index_compact(
     base = _base(index_dir, version)
     gen, tomb_gen, seq = _state(spark, base)
     new_gen = gen + 1
-    tombs = _load_tombstones(spark, base, tomb_gen)
+    tombs = _load_tombstones(spark, base, tomb_gen, "vec_id")
 
     cells = _anti_tombstones(
-        spark.read.parquet(_cells_dir(base, gen)), tombs, "vec_id"
+        spark.read.parquet(_gen_dir(base, "cells", gen)), tombs, "vec_id"
     )
     codes = _anti_tombstones(
-        spark.read.parquet(_codes_dir(base, gen)), tombs, "vec_id"
+        spark.read.parquet(_gen_dir(base, "codes", gen)), tombs, "vec_id"
     )
     # the two rewrites are independent and land in the UNCOMMITTED new
     # generation (the manifest append below is the atomic flip, so
@@ -527,39 +488,23 @@ def ann_index_compact(
         lambda: _layout(cells, ["cell"], files_per_cell, "vec_id")
         .write.mode("overwrite")
         .partitionBy("cell")
-        .parquet(_cells_dir(base, new_gen)),
+        .parquet(_gen_dir(base, "cells", new_gen)),
         lambda: _layout(codes, ["cell"], files_per_cell, "vec_id")
         .write.mode("overwrite")
         .partitionBy("cell")
-        .parquet(_codes_dir(base, new_gen)),
+        .parquet(_gen_dir(base, "codes", new_gen)),
     )
 
-    # verify the new generation is READABLE before flipping readers to
-    # it — compacting a fully-tombstoned index writes file-less dirs,
-    # and committing those would brick the store after the GC below
-    unreadable = _verify_readable(
-        spark, _cells_dir(base, new_gen), _codes_dir(base, new_gen)
+    # gate + commit; the superseded generation stays for probes that
+    # resolved the old manifest (snapshot isolation, pinned by the
+    # serve-during-compact test) until `ann_index_gc` reclaims it
+    new_dirs = [_gen_dir(base, c, new_gen) for c in _COMPONENTS]
+    _commit_generation(
+        spark, base, seq, new_gen, tomb_gen, new_dirs, "ann_index_compact"
     )
-    if unreadable:
-        raise ValueError(
-            f"ann_index_compact: new generation at {unreadable} is empty "
-            f"or unreadable (every row tombstoned?) — store left on the "
-            f"old generation; rebuild instead of compacting to empty"
-        )
-
-    # THE commit: readers atomically move to (new_gen, tomb_gen+1) —
-    # the fresh tombstone generation has no directory, i.e. empty log.
-    # The superseded generation is NOT deleted here: a probe that
-    # resolved the manifest just before this commit may still be
-    # scanning the old directories (snapshot isolation — every probe
-    # answers from entirely one committed generation, never a mix;
-    # pinned by the serve-during-compact test).  Reclamation is
-    # `ann_index_gc`'s job, run after in-flight readers drain
-    # (ann_index_maintain does both in sequence as the scheduler verb).
-    _append_commit(spark, base, seq + 1, new_gen, tomb_gen + 1)
 
     return (
-        spark.read.parquet(_cells_dir(base, new_gen))
+        spark.read.parquet(_gen_dir(base, "cells", new_gen))
         .groupBy(F.col("cell").cast("int").alias("cell"))
         .agg(F.count(F.lit(1)).alias("n_vectors"))
     )
@@ -577,15 +522,18 @@ def ann_index_stats(
     columns + one broadcast tombstone join; never touches vectors."""
     base = _base(index_dir, version)
     gen, tomb_gen, _ = _state(spark, base)
-    cells = spark.read.parquet(_cells_dir(base, gen)).select(
+    cells = spark.read.parquet(_gen_dir(base, "cells", gen)).select(
         "vec_id", F.col("cell").cast("int").alias("cell")
     )
-    t = _load_tombstones(spark, base, tomb_gen)
+    t = _load_tombstones(spark, base, tomb_gen, "vec_id")
     if t is None:
         dead = F.lit(0)
     else:
+        # distinct ids: a repeated id in the log must not multiply rows
         cells = cells.join(
-            F.broadcast(t.withColumn("_dead", F.lit(1))), "vec_id", "left"
+            F.broadcast(t.distinct().withColumn("_dead", F.lit(1))),
+            "vec_id",
+            "left",
         )
         dead = F.coalesce(F.col("_dead"), F.lit(0))
     return cells.groupBy("cell").agg(
@@ -608,23 +556,10 @@ def ann_index_gc(
     the version root through the Hadoop FS API, keeps exactly the
     directories the current manifest references, deletes every other
     cells/codes/tombstones generation.  Returns the removed names."""
-    import re
-
     base = _base(index_dir, version)
     gen, tomb_gen, _ = _state(spark, base)
-    keep = {
-        "centroids", "codebook", "_commits",
-        _cells_dir(base, gen).rsplit("/", 1)[-1],
-        _codes_dir(base, gen).rsplit("/", 1)[-1],
-        _tomb_dir(base, tomb_gen).rsplit("/", 1)[-1],
-    }
-    collectable = re.compile(r"^(cells|codes)(_g\d+)?$|^tombstones(_t\d+)?$")
-    removed = []
-    for name in _fs_list(spark, base):
-        if name not in keep and collectable.match(name):
-            _fs_delete(spark, f"{base}/{name}")
-            removed.append(name)
-    return sorted(removed)
+    keep = [_gen_dir(base, c, gen) for c in _COMPONENTS]
+    return _gc_generations(spark, base, keep + [_tomb_dir(base, tomb_gen)])
 
 
 def ann_index_maintain(
@@ -666,13 +601,12 @@ def ann_index_maintain(
     explicitly via `ann_index_gc` after a drain."""
     base = _base(index_dir, version)
     gen, tomb_gen, _ = _state(spark, base)
-    cells_dir = _cells_dir(base, gen)
+    cells_dir = _gen_dir(base, "cells", gen)
     n_rows = spark.read.parquet(cells_dir).count()
-    tombs = _load_tombstones(spark, base, tomb_gen)
-    n_dead = 0 if tombs is None else tombs.count()
+    tombs = _load_tombstones(spark, base, tomb_gen, "vec_id")
+    n_dead = _count_tombstones(tombs)
     dead_ratio = n_dead / max(n_rows, 1)
-    from ..storage.manifest import max_files_per_leaf_dir
-    max_files = max_files_per_leaf_dir(spark, cells_dir, 1)
+    max_files = _max_files(spark, cells_dir, 1)
 
     reasons = []
     if dead_ratio > max_dead_ratio:
@@ -720,7 +654,7 @@ def ann_index_probe(
     the same corpus/params."""
     base = _base(index_dir, version)
     gen, tomb_gen, _ = _state(spark, base)
-    cells = spark.read.parquet(_cells_dir(base, gen))
+    cells = spark.read.parquet(_gen_dir(base, "cells", gen))
     qdf = cells.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
@@ -775,7 +709,7 @@ def _probe_vectors_static(
     the CALLER (exactly once per verb), so the member-id wrapper does
     not pay a second resolution on top of the vector form's."""
     cents = spark.read.parquet(f"{base}/centroids")
-    cells = spark.read.parquet(_cells_dir(base, gen))
+    cells = spark.read.parquet(_gen_dir(base, "cells", gen))
     probes = _probe_cells_df(qdf, cents, n_probe)
     # cell-list routing metadata (≤ |queries| x n_probe values):
     # collected so the inverted-file read prunes partitions STATICALLY
@@ -787,7 +721,7 @@ def _probe_vectors_static(
     probe_cells = sorted(
         int(r["cell"]) for r in probes.select("cell").distinct().collect()
     )
-    tombs = _load_tombstones(spark, base, tomb_gen)
+    tombs = _load_tombstones(spark, base, tomb_gen, "vec_id")
     pruned = _anti_tombstones(
         cells.filter(F.col("cell").isin(probe_cells)),
         tombs, id_col,
@@ -888,7 +822,7 @@ def ann_index_probe_filtered(
     corpus), never the full index."""
     base = _base(index_dir, version)
     gen, tomb_gen, _ = _state(spark, base)
-    cells = spark.read.parquet(_cells_dir(base, gen))
+    cells = spark.read.parquet(_gen_dir(base, "cells", gen))
     qdf = cells.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
@@ -910,12 +844,12 @@ def _probe_filtered_impl(
     vec_col: str,
 ) -> DataFrame:
     cents = spark.read.parquet(f"{base}/centroids")
-    cells = spark.read.parquet(_cells_dir(base, gen))
+    cells = spark.read.parquet(_gen_dir(base, "cells", gen))
     probes = _probe_cells_df(qdf, cents, n_probe)
     probe_cells = sorted(
         int(r["cell"]) for r in probes.select("cell").distinct().collect()
     )
-    tombs = _load_tombstones(spark, base, tomb_gen)
+    tombs = _load_tombstones(spark, base, tomb_gen, "vec_id")
     pruned = _anti_tombstones(
         cells.filter(F.col("cell").isin(probe_cells)),
         tombs, id_col,
@@ -957,9 +891,9 @@ def _probe_dpp_impl(
     probe side), so the scan touches only the probed cell directories
     with ZERO driver-side routing (no collect anywhere in the plan)."""
     cents = spark.read.parquet(f"{base}/centroids")
-    cells = spark.read.parquet(_cells_dir(base, gen))
+    cells = spark.read.parquet(_gen_dir(base, "cells", gen))
     probes = _probe_cells_df(qdf, cents, n_probe)
-    tombs = _load_tombstones(spark, base, tomb_gen)
+    tombs = _load_tombstones(spark, base, tomb_gen, "vec_id")
     live = _anti_tombstones(cells, tombs, id_col)
     cand = (
         live.join(F.broadcast(probes), "cell")
@@ -992,7 +926,7 @@ def ann_index_probe_dpp(
     query vectors use `ann_index_probe_vectors_dpp`."""
     base = _base(index_dir, version)
     gen, tomb_gen, _ = _state(spark, base)
-    cells = spark.read.parquet(_cells_dir(base, gen))
+    cells = spark.read.parquet(_gen_dir(base, "cells", gen))
     qdf = cells.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
@@ -1056,10 +990,10 @@ def ann_index_probe_pq(
     and friends."""
     base = _base(index_dir, version)
     gen, tomb_gen, _ = _state(spark, base)
-    cells = spark.read.parquet(_cells_dir(base, gen))
-    tombs = _load_tombstones(spark, base, tomb_gen)
+    cells = spark.read.parquet(_gen_dir(base, "cells", gen))
+    tombs = _load_tombstones(spark, base, tomb_gen, "vec_id")
     codes = _anti_tombstones(
-        spark.read.parquet(_codes_dir(base, gen)), tombs, id_col
+        spark.read.parquet(_gen_dir(base, "codes", gen)), tombs, id_col
     )
     m = sum(1 for c in codes.columns if c.startswith("code"))
 
@@ -1145,10 +1079,10 @@ def _probe_ivfpq_impl(
     decimal-quantized arithmetic, same e12 BIGINT distances, same
     tie-breaks."""
     cents = spark.read.parquet(f"{base}/centroids")
-    cells = spark.read.parquet(_cells_dir(base, gen))
-    codes = spark.read.parquet(_codes_dir(base, gen))
+    cells = spark.read.parquet(_gen_dir(base, "cells", gen))
+    codes = spark.read.parquet(_gen_dir(base, "codes", gen))
     probes = _probe_cells_df(qdf, cents, n_probe)
-    tombs = _load_tombstones(spark, base, tomb_gen)
+    tombs = _load_tombstones(spark, base, tomb_gen, "vec_id")
     if dpp:
         # both scans prune via DynamicPruningExpression: the cells scan
         # from the inner broadcast join below, the codes scan from this
@@ -1246,7 +1180,10 @@ def ann_index_probe_ivfpq(
     base = _base(index_dir, version)
     gen, tomb_gen, _ = _state(spark, base)
     qdf = _member_qdf(
-        spark.read.parquet(_cells_dir(base, gen)), query_ids, id_col, vec_col
+        spark.read.parquet(_gen_dir(base, "cells", gen)),
+        query_ids,
+        id_col,
+        vec_col,
     )
     return _probe_ivfpq_impl(
         spark, base, gen, tomb_gen, qdf, topk, n_probe, id_col, vec_col,
@@ -1272,7 +1209,10 @@ def ann_index_probe_ivfpq_dpp(
     base = _base(index_dir, version)
     gen, tomb_gen, _ = _state(spark, base)
     qdf = _member_qdf(
-        spark.read.parquet(_cells_dir(base, gen)), query_ids, id_col, vec_col
+        spark.read.parquet(_gen_dir(base, "cells", gen)),
+        query_ids,
+        id_col,
+        vec_col,
     )
     return _probe_ivfpq_impl(
         spark, base, gen, tomb_gen, qdf, topk, n_probe, id_col, vec_col,

@@ -49,9 +49,9 @@ object-store-safe commit story):
   anti-join the (broadcast, tombstone-sized) delete log.
 - `dedup_index_compact` — rewrite live rows into a fresh generation
   directory pair and COMMIT with one ``_commits`` manifest append
-  (the fresh generation has no tombstone dir = log truncation); old
-  generations GC'd best-effort.  Crash-at-any-point leaves probes on
-  a complete generation.
+  (the fresh generation has no tombstone dir = log truncation);
+  superseded generations wait for `dedup_index_gc`.  Crash-at-any-point
+  leaves probes on a complete generation.
 - `dedup_index_stats`   — ops monitoring: per-(band, pfx) physical /
   live row counts, distinct keys, and the max live bucket size (the
   hot-bucket skew monitor — a degenerate band key is the one thing
@@ -90,35 +90,31 @@ from pyspark.sql import functions as F
 
 from ..caching import materialize_and_release
 from ..storage.manifest import (
-    append_commit as _append_commit,
-    fs_delete as _fs_delete,
-    fs_list as _fs_list,
+    anti_tombstones as _anti_tombstones,
+    append_tombstones as _append_tombstones,
+    commit_generation as _commit_generation,
+    count_tombstones as _count_tombstones,
+    gc_generations as _gc_generations,
+    gen_dir as _gen_dir,
+    guard_hits as _id_guard,
+    load_tombstones as _load_tombstones,
     local_rows_df as _local_rows,
     manifest_state as _state,
+    max_files_per_leaf_dir as _max_files,
+    read_parquet_pinned as _read_pinned,
     repartition_for_layout as _layout,
     reset_version_dir as _reset_version_dir,
     run_concurrent as _run_concurrent,
     store_base as _base,
-    try_read_parquet as _try_read,
-    verify_readable as _verify_readable,
+    tomb_dir as _tomb_dir,
 )
 from .dedup import lsh_band_keys, minhash_signatures
 
 
-def _sigs_dir(base: str, gen: int) -> str:
-    return f"{base}/sigs" if gen == 0 else f"{base}/sigs_g{gen}"
+# generation-addressed components (storage/manifest.gen_dir)
+_COMPONENTS = ("sigs", "bands")
 
-
-def _bands_dir(base: str, gen: int) -> str:
-    return f"{base}/bands" if gen == 0 else f"{base}/bands_g{gen}"
-
-
-def _tomb_dir(base: str, tomb_gen: int) -> str:
-    return (
-        f"{base}/tombstones"
-        if tomb_gen == 0
-        else f"{base}/tombstones_t{tomb_gen}"
-    )
+_META_DDL = "num_hashes int, bands int, shingle_n int"
 
 
 def resolve_dedup_dirs(
@@ -129,15 +125,19 @@ def resolve_dedup_dirs(
     base = _base(index_dir, version)
     gen, tomb_gen, _ = _state(spark, base)
     return {
-        "sigs": _sigs_dir(base, gen),
-        "bands": _bands_dir(base, gen),
+        "sigs": _gen_dir(base, "sigs", gen),
+        "bands": _gen_dir(base, "bands", gen),
         "tombstones": _tomb_dir(base, tomb_gen),
         "meta": f"{base}/_meta",
     }
 
 
 def _meta(spark: SparkSession, base: str) -> tuple[int, int, int]:
-    row = spark.read.parquet(f"{base}/_meta").collect()[0]
+    meta = _read_pinned(spark, f"{base}/_meta", _META_DDL)
+    rows = [] if meta is None else meta.collect()
+    if not rows:
+        raise FileNotFoundError(f"dedup_index: no index at {base} (no _meta)")
+    row = rows[0]
     return int(row["num_hashes"]), int(row["bands"]), int(row["shingle_n"])
 
 
@@ -162,24 +162,6 @@ def _banded(
         F.substring("key", 1, 1).alias("pfx"),
     )
     return raw.withColumnRenamed(id_col, "doc_id"), banded, raw
-
-
-def _load_tombstones(spark: SparkSession, base: str, tomb_gen: int):
-    """The tombstone log as a distinct-id frame, or None when empty —
-    loaded ONCE per verb and threaded through every anti-join."""
-    t = _try_read(spark, _tomb_dir(base, tomb_gen))
-    return None if t is None else t.distinct()
-
-
-def _anti_tombstones(df: DataFrame, tombs, id_col: str) -> DataFrame:
-    """Drop rows whose `id_col` is in the (pre-loaded) tombstone frame."""
-    if tombs is None:
-        return df
-    return df.join(
-        F.broadcast(tombs.withColumnRenamed("doc_id", "_dead")),
-        df[id_col] == F.col("_dead"),
-        "left_anti",
-    )
 
 
 def _band_manifest(bands_df: DataFrame) -> DataFrame:
@@ -217,9 +199,7 @@ def dedup_index_build(
     _reset_version_dir(spark, base)
 
     _local_rows(
-        spark,
-        "num_hashes int, bands int, shingle_n int",
-        [(num_hashes, bands, shingle_n)],
+        spark, _META_DDL, [(num_hashes, bands, shingle_n)]
     ).coalesce(1).write.mode("overwrite").parquet(f"{base}/_meta")
 
     sigs, banded, raw = _banded(
@@ -236,11 +216,11 @@ def dedup_index_build(
         # from the sign pass CACHED by the bands write.
         _layout(banded, ["band", "pfx"], files_per_partition, "doc_id").write.mode(
             "overwrite"
-        ).partitionBy("band", "pfx").parquet(_bands_dir(base, 0))
-        sigs.write.mode("overwrite").parquet(_sigs_dir(base, 0))
+        ).partitionBy("band", "pfx").parquet(_gen_dir(base, "bands", 0))
+        sigs.write.mode("overwrite").parquet(_gen_dir(base, "sigs", 0))
     finally:
         raw.unpersist()
-    return _band_manifest(spark.read.parquet(_bands_dir(base, 0)))
+    return _band_manifest(spark.read.parquet(_gen_dir(base, "bands", 0)))
 
 
 # ---------------------------------------------------------------------------
@@ -273,7 +253,7 @@ def dedup_index_probe(
         probe_docs, id_col, text_col, num_hashes, bands, shingle_n
     )
     try:
-        idx_bands = spark.read.parquet(_bands_dir(base, gen))
+        idx_bands = spark.read.parquet(_gen_dir(base, "bands", gen))
         if prune:
             combos = pband.select("band", "pfx").distinct().collect()  # ≤ bands×16
             pred = None
@@ -300,10 +280,10 @@ def dedup_index_probe(
         if exclude_self:
             cand = cand.filter(F.col("probe_id") != F.col("index_id"))
         cand = cand.distinct()
-        tombs = _load_tombstones(spark, base, tomb_gen)
+        tombs = _load_tombstones(spark, base, tomb_gen, "doc_id")
         cand = _anti_tombstones(cand, tombs, "index_id")
 
-        isigs = spark.read.parquet(_sigs_dir(base, gen))
+        isigs = spark.read.parquet(_gen_dir(base, "sigs", gen))
         agree = sum(
             F.when(F.col(f"p.h{i}") == F.col(f"i.h{i}"), 1).otherwise(0)
             for i in range(num_hashes)
@@ -372,34 +352,17 @@ def dedup_index_append(
     gen, tomb_gen, _ = _state(spark, base)
 
     new_ids = new_docs.select(F.col(id_col).alias("doc_id")).distinct()
-    tombs = _load_tombstones(spark, base, tomb_gen)
-    conflicts = []
-    if tombs is not None:
-        conflicts.append(tombs.select("doc_id", F.lit("dead").alias("_why")))
-    if assert_unique:
-        # band side ONLY: bands ⊇ sigs on ids at all times (bands are
-        # written first by build and append; compact intersects), so a
-        # sigs-side scan can never catch an id this one misses — one
-        # store-wide id-column scan saved per append (round 14; the
-        # invariant is pinned by tests and audited by fsck ids_match)
-        conflicts.append(
-            spark.read.parquet(_bands_dir(base, gen)).select(
-                "doc_id", F.lit("live").alias("_why")
-            )
-        )
-    def _guard_hits() -> dict:
-        if not conflicts:
-            return {}
-        existing = conflicts[0]
-        for c in conflicts[1:]:
-            existing = existing.unionByName(c)
-        return {
-            r["_why"]: r["n"]
-            for r in existing.join(F.broadcast(new_ids), "doc_id", "semi")
-            .groupBy("_why")
-            .agg(F.countDistinct("doc_id").alias("n"))
-            .collect()
-        }
+    tombs = _load_tombstones(spark, base, tomb_gen, "doc_id")
+    # band side ONLY: bands ⊇ sigs on ids at all times (bands are
+    # written first by build and append; compact intersects), so a
+    # sigs-side scan can never catch an id this one misses — one
+    # store-wide id-column scan saved per append (round 14; the
+    # invariant is pinned by tests and audited by fsck ids_match)
+    live_ids = (
+        spark.read.parquet(_gen_dir(base, "bands", gen))
+        if assert_unique
+        else None
+    )
 
     sigs, banded, raw = _banded(
         new_docs, id_col, text_col, num_hashes, bands, shingle_n
@@ -410,7 +373,9 @@ def dedup_index_append(
         # overlap; the store writes below start only after both finish
         # and the guard passes, so nothing is written for a rejected
         # batch (and the finally releases the pin on the raise path)
-        hits, _ = _run_concurrent(_guard_hits, raw.count)
+        hits, _ = _run_concurrent(
+            lambda: _id_guard(new_ids, tombs, live_ids, "doc_id"), raw.count
+        )
         if hits.get("dead"):
             raise ValueError(
                 f"dedup_index_append: {hits['dead']} incoming id(s) are "
@@ -430,8 +395,8 @@ def dedup_index_append(
         # under-reports, and is band-side detectable by fsck)
         _layout(banded, ["band", "pfx"], 1, "doc_id").write.mode(
             "append"
-        ).partitionBy("band", "pfx").parquet(_bands_dir(base, gen))
-        sigs.write.mode("append").parquet(_sigs_dir(base, gen))
+        ).partitionBy("band", "pfx").parquet(_gen_dir(base, "bands", gen))
+        sigs.write.mode("append").parquet(_gen_dir(base, "sigs", gen))
         manifest = _band_manifest(banded).localCheckpoint(eager=True)
     finally:
         raw.unpersist()
@@ -447,20 +412,19 @@ def dedup_index_delete(
     delete_ids: list[int],
     version: str = "v1",
 ) -> DataFrame:
-    """Tombstone deletion: ids append to the CURRENT tombstone
-    generation; probes anti-join it; space is reclaimed by the next
-    compact (LSM delete story).  Returns the one-row receipt."""
+    """Tombstone deletion: ids the log does not hold yet append to the
+    CURRENT tombstone generation (a repeated delete adds nothing);
+    probes anti-join it; space is reclaimed by the next compact (LSM
+    delete story).  Returns the one-row receipt."""
     base = _base(index_dir, version)
     _, tomb_gen, _ = _state(spark, base)
-    tdir = _tomb_dir(base, tomb_gen)
-    _local_rows(
-        spark, "doc_id long", [(int(i),) for i in delete_ids]
-    ).coalesce(1).write.mode("append").parquet(tdir)
-    total = spark.read.parquet(tdir).distinct().count()
+    fresh, total = _append_tombstones(
+        spark, base, tomb_gen, "doc_id", delete_ids
+    )
     return _local_rows(
         spark,
         "n_tombstones_added long, n_tombstones_total long",
-        [(len(delete_ids), total)],
+        [(len(fresh), total)],
     )
 
 
@@ -477,8 +441,8 @@ def dedup_index_compact(
     COMMIT by appending one row to the ``_commits`` manifest (shared
     protocol, storage/manifest.py — never a rename, crash-safe on
     object stores; the fresh generation has no tombstone dir, which IS
-    the delete-log truncation).  Old generations GC'd best-effort.
-    Returns the per-(band, pfx) manifest read BACK from the compacted
+    the delete-log truncation).  Superseded generations are left for
+    `dedup_index_gc`.  Returns the per-(band, pfx) manifest read BACK from the compacted
     store (the receipt proves what is ON DISK — same gate discipline
     as build/append).
 
@@ -491,13 +455,13 @@ def dedup_index_compact(
     base = _base(index_dir, version)
     gen, tomb_gen, seq = _state(spark, base)
     new_gen = gen + 1
-    tombs = _load_tombstones(spark, base, tomb_gen)
+    tombs = _load_tombstones(spark, base, tomb_gen, "doc_id")
 
     bands_live = _anti_tombstones(
-        spark.read.parquet(_bands_dir(base, gen)), tombs, "doc_id"
+        spark.read.parquet(_gen_dir(base, "bands", gen)), tombs, "doc_id"
     )
     sigs_live = _anti_tombstones(
-        spark.read.parquet(_sigs_dir(base, gen)), tombs, "doc_id"
+        spark.read.parquet(_gen_dir(base, "sigs", gen)), tombs, "doc_id"
     )
     # torn-append heal: keep only ids covered by BOTH halves (co-keyed
     # semi-joins on doc_id — one extra shuffle each, amortized like the
@@ -506,7 +470,9 @@ def dedup_index_compact(
         sigs_live.select("doc_id").distinct(), "doc_id", "semi"
     )
     sigs_whole = sigs_live.join(
-        spark.read.parquet(_bands_dir(base, gen)).select("doc_id").distinct(),
+        spark.read.parquet(_gen_dir(base, "bands", gen))
+        .select("doc_id")
+        .distinct(),
         "doc_id",
         "semi",
     )
@@ -518,65 +484,39 @@ def dedup_index_compact(
         lambda: _layout(bands_live, ["band", "pfx"], files_per_partition, "doc_id")
         .write.mode("overwrite")
         .partitionBy("band", "pfx")
-        .parquet(_bands_dir(base, new_gen)),
+        .parquet(_gen_dir(base, "bands", new_gen)),
         lambda: sigs_whole.coalesce(files_per_partition)
         .write.mode("overwrite")
-        .parquet(_sigs_dir(base, new_gen)),
+        .parquet(_gen_dir(base, "sigs", new_gen)),
     )
 
-    # verify the new generation is READABLE before flipping readers
-    # (compacting a fully-tombstoned index writes file-less dirs —
-    # committing those would brick the store after the GC below);
-    # driver-side schema resolution only, no data scan
-    unreadable = _verify_readable(
-        spark, _bands_dir(base, new_gen), _sigs_dir(base, new_gen)
+    # gate + commit; the superseded generation stays for probes that
+    # resolved the old manifest (snapshot isolation) until
+    # `dedup_index_gc` reclaims it
+    new_dirs = [_gen_dir(base, c, new_gen) for c in _COMPONENTS]
+    _commit_generation(
+        spark, base, seq, new_gen, tomb_gen, new_dirs, "dedup_index_compact"
     )
-    if unreadable:
-        raise ValueError(
-            f"dedup_index_compact: new generation at {unreadable} is empty "
-            f"or unreadable (every row tombstoned?) — store left on the "
-            f"old generation; rebuild instead of compacting to empty"
-        )
 
-    # THE commit: readers atomically move to (new_gen, tomb_gen+1).
-    # The superseded generation is NOT deleted here (round 14, store-
-    # family contract): a probe that resolved the manifest just before
-    # this commit may still be scanning the old directories — snapshot
-    # isolation means every probe answers from entirely one committed
-    # generation, never a mix.  `dedup_index_gc` is the destructive
-    # reclaim step, run after in-flight readers drain
-    # (dedup_index_maintain does compact + gc as the scheduler path).
-    _append_commit(spark, base, seq + 1, new_gen, tomb_gen + 1)
-
-    return _band_manifest(spark.read.parquet(_bands_dir(base, new_gen)))
+    return _band_manifest(
+        spark.read.parquet(_gen_dir(base, "bands", new_gen))
+    )
 
 
 def dedup_index_gc(
     spark: SparkSession, index_dir: str, version: str = "v1"
 ) -> list[str]:
-    """Reclaim SUPERSEDED generation directories the best-effort GC in
-    `dedup_index_compact` may have left behind (a crash after the
-    manifest commit leaves the old generation orphaned — readers never
-    see it, but it holds space).  Same contract as `ann_index_gc`:
+    """Reclaim SUPERSEDED generation directories — the ones
+    `dedup_index_compact` leaves behind for reader grace, plus anything
+    a crashed compact orphaned (readers never see either, but they hold
+    space).  Run it after in-flight probes drain.  Same contract as
+    `ann_index_gc`:
     the manifest is the single source of truth, so nothing referenced
     can be collected.  Returns the removed names."""
-    import re
-
     base = _base(index_dir, version)
     gen, tomb_gen, _ = _state(spark, base)
-    keep = {
-        "_meta", "_commits",
-        _sigs_dir(base, gen).rsplit("/", 1)[-1],
-        _bands_dir(base, gen).rsplit("/", 1)[-1],
-        _tomb_dir(base, tomb_gen).rsplit("/", 1)[-1],
-    }
-    collectable = re.compile(r"^(sigs|bands)(_g\d+)?$|^tombstones(_t\d+)?$")
-    removed = []
-    for name in _fs_list(spark, base):
-        if name not in keep and collectable.match(name):
-            _fs_delete(spark, f"{base}/{name}")
-            removed.append(name)
-    return sorted(removed)
+    keep = [_gen_dir(base, c, gen) for c in _COMPONENTS]
+    return _gc_generations(spark, base, keep + [_tomb_dir(base, tomb_gen)])
 
 
 def dedup_index_maintain(
@@ -612,8 +552,8 @@ def dedup_index_maintain(
     compact when triggered."""
     base = _base(index_dir, version)
     gen, tomb_gen, _ = _state(spark, base)
-    sigs_ids = spark.read.parquet(_sigs_dir(base, gen)).select("doc_id")
-    band_ids = spark.read.parquet(_bands_dir(base, gen)).select("doc_id")
+    sigs_ids = spark.read.parquet(_gen_dir(base, "sigs", gen)).select("doc_id")
+    band_ids = spark.read.parquet(_gen_dir(base, "bands", gen)).select("doc_id")
     # orphan ids (torn-append detector) + distinct doc count in ONE job
     sides = sigs_ids.select(
         "doc_id", F.lit(1).alias("_s"), F.lit(0).alias("_b")
@@ -632,11 +572,10 @@ def dedup_index_maintain(
         .first()
     )
     n_orphans, n_docs = int(cov["orphans"]), int(cov["n_docs"])
-    tombs = _load_tombstones(spark, base, tomb_gen)
-    n_dead = 0 if tombs is None else tombs.count()
+    tombs = _load_tombstones(spark, base, tomb_gen, "doc_id")
+    n_dead = _count_tombstones(tombs)
     dead_ratio = n_dead / max(n_docs, 1)
-    from ..storage.manifest import max_files_per_leaf_dir
-    max_files = max_files_per_leaf_dir(spark, _bands_dir(base, gen), 2)
+    max_files = _max_files(spark, _gen_dir(base, "bands", gen), 2)
 
     reasons = []
     if n_orphans > 0:
@@ -692,8 +631,8 @@ def dedup_index_fsck(
     base = _base(index_dir, version)
     _, bands_n, _ = _meta(spark, base)
     gen, _, _ = _state(spark, base)
-    sigs = spark.read.parquet(_sigs_dir(base, gen)).select("doc_id")
-    bnd = spark.read.parquet(_bands_dir(base, gen))
+    sigs = spark.read.parquet(_gen_dir(base, "sigs", gen)).select("doc_id")
+    bnd = spark.read.parquet(_gen_dir(base, "bands", gen))
 
     n_sig_docs = sigs.distinct().count()
     bdocs = bnd.select("doc_id").distinct()
@@ -744,7 +683,7 @@ def dedup_index_manifest(
     read back from disk through the generation resolver."""
     base = _base(index_dir, version)
     gen, _, _ = _state(spark, base)
-    return _band_manifest(spark.read.parquet(_bands_dir(base, gen)))
+    return _band_manifest(spark.read.parquet(_gen_dir(base, "bands", gen)))
 
 
 # ---------------------------------------------------------------------------
@@ -759,8 +698,8 @@ def dedup_index_stats(
     LSH self-join quadratic; production dedup services alert on it)."""
     base = _base(index_dir, version)
     gen, tomb_gen, _ = _state(spark, base)
-    bands_df = spark.read.parquet(_bands_dir(base, gen))
-    tombs = _load_tombstones(spark, base, tomb_gen)
+    bands_df = spark.read.parquet(_gen_dir(base, "bands", gen))
+    tombs = _load_tombstones(spark, base, tomb_gen, "doc_id")
     live = _anti_tombstones(bands_df, tombs, "doc_id")
 
     phys = bands_df.groupBy("band", "pfx").agg(

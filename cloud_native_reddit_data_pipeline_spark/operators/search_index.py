@@ -9,8 +9,10 @@ documents enter ONCE at ingest (`addReddit.py:63-64` writes each
 harvested batch into the index; `redditProcessor.py:67-75` then
 queries it without ever re-reading the corpus).  This module is that
 behavior in engine terms, on the same generation-manifest commit
-protocol as the ANN and dedup indexes (`storage/manifest.py` — see
-that module's docstring for the object-store-safe commit story):
+protocol and generation-store toolkit (directory names, delete log,
+id guard, commit gate, GC) as the ANN and dedup indexes
+(`storage/manifest.py` — see that module's docstring for the
+object-store-safe commit story):
 
 - `search_index_build`  — tokenize the corpus once and persist the
   classic index components: POSTINGS (term, doc_id, fld, tf, dl),
@@ -162,9 +164,16 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens
 from ..storage.manifest import (
-    append_commit as _append_commit,
+    anti_tombstones as _anti_tombstones,
+    append_tombstones as _append_tombstones,
+    commit_generation as _commit_generation,
+    count_tombstones as _count_tombstones,
     fs_delete as _fs_delete,
     fs_list as _fs_list,
+    gc_generations as _gc_generations,
+    gen_dir as _gen_dir,
+    guard_hits as _id_guard,
+    load_tombstones as _load_tombstones,
     local_rows_df as _local_rows,
     manifest_state as _state,
     max_files_per_leaf_dir as _max_files,
@@ -173,10 +182,13 @@ from ..storage.manifest import (
     reset_version_dir as _reset_version_dir,
     run_concurrent as _run_concurrent,
     store_base as _base,
-    verify_readable as _verify_readable,
+    tomb_dir as _tomb_dir,
 )
 
 DEFAULT_BUCKETS = 16
+
+# generation-addressed components (storage/manifest.gen_dir)
+_COMPONENTS = ("postings", "doclens", "terms", "stats")
 
 # fixed component schemas: every read pins them, so none runs a
 # footer-inference job (postings: `_postings_ddl`)
@@ -184,7 +196,6 @@ _META_DDL = "n_buckets int, analyzer string, positions boolean, title_len int"
 _DOCLENS_DDL = "doc_id long, dl long, dl_t long"
 _STATS_DDL = "n_docs long, sum_dl long, sum_dl_t long"
 _TERMS_DDL = "tb int, term string"
-_TOMBS_DDL = "doc_id long"
 
 
 class DuplicateIdsError(ValueError):
@@ -221,30 +232,6 @@ class FieldedStoreMismatchError(ValueError):
     ``title_len`` or use the matching query verb."""
 
 
-def _postings_dir(base: str, gen: int) -> str:
-    return f"{base}/postings" if gen == 0 else f"{base}/postings_g{gen}"
-
-
-def _doclens_dir(base: str, gen: int) -> str:
-    return f"{base}/doclens" if gen == 0 else f"{base}/doclens_g{gen}"
-
-
-def _terms_dir(base: str, gen: int) -> str:
-    return f"{base}/terms" if gen == 0 else f"{base}/terms_g{gen}"
-
-
-def _stats_dir(base: str, gen: int) -> str:
-    return f"{base}/stats" if gen == 0 else f"{base}/stats_g{gen}"
-
-
-def _tomb_dir(base: str, tomb_gen: int) -> str:
-    return (
-        f"{base}/tombstones"
-        if tomb_gen == 0
-        else f"{base}/tombstones_t{tomb_gen}"
-    )
-
-
 def resolve_search_dirs(
     spark: SparkSession, index_dir: str, version: str = "v1"
 ) -> dict[str, str]:
@@ -253,10 +240,7 @@ def resolve_search_dirs(
     base = _base(index_dir, version)
     gen, tomb_gen, _ = _state(spark, base)
     return {
-        "postings": _postings_dir(base, gen),
-        "doclens": _doclens_dir(base, gen),
-        "terms": _terms_dir(base, gen),
-        "stats": _stats_dir(base, gen),
+        **{c: _gen_dir(base, c, gen) for c in _COMPONENTS},
         "tombstones": _tomb_dir(base, tomb_gen),
         "meta": f"{base}/_meta",
     }
@@ -370,20 +354,20 @@ def _read_postings(
     'create empty, ingest forever' lifecycle) serves without special
     cases."""
     return _read_component(
-        spark, _postings_dir(base, gen), _postings_ddl(positions)
+        spark, _gen_dir(base, "postings", gen), _postings_ddl(positions)
     )
 
 
 def _read_terms(spark: SparkSession, base: str, gen: int) -> DataFrame:
-    return _read_component(spark, _terms_dir(base, gen), _TERMS_DDL)
+    return _read_component(spark, _gen_dir(base, "terms", gen), _TERMS_DDL)
 
 
 def _read_doclens(spark: SparkSession, base: str, gen: int) -> DataFrame:
-    return _read_component(spark, _doclens_dir(base, gen), _DOCLENS_DDL)
+    return _read_component(spark, _gen_dir(base, "doclens", gen), _DOCLENS_DDL)
 
 
 def _read_stats(spark: SparkSession, base: str, gen: int) -> DataFrame:
-    return _read_component(spark, _stats_dir(base, gen), _STATS_DDL)
+    return _read_component(spark, _gen_dir(base, "stats", gen), _STATS_DDL)
 
 
 def _tokenized(
@@ -475,23 +459,6 @@ def _tokenized(
     return postings, doclens
 
 
-def _load_tombstones(spark: SparkSession, base: str, tomb_gen: int):
-    """The tombstone log, or None before the first delete of this
-    tombstone generation.  Not deduplicated: readers anti-join it or
-    count distinct ids, and a duplicate tombstone changes neither."""
-    return _read_pinned(spark, _tomb_dir(base, tomb_gen), _TOMBS_DDL)
-
-
-def _anti_tombstones(df: DataFrame, tombs, id_col: str) -> DataFrame:
-    if tombs is None:
-        return df
-    return df.join(
-        F.broadcast(tombs.withColumnRenamed("doc_id", "_dead")),
-        df[id_col] == F.col("_dead"),
-        "left_anti",
-    )
-
-
 def _bucket_manifest(postings: DataFrame) -> DataFrame:
     return postings.groupBy(F.col("tb").cast("int").alias("tb")).agg(
         F.count(F.lit(1)).alias("n_postings"),
@@ -575,12 +542,12 @@ def search_index_build(
     # is the slower chain.
     def _lens_chain() -> None:
         doclens.coalesce(files_per_partition).write.mode("overwrite").parquet(
-            _doclens_dir(base, 0)
+            _gen_dir(base, "doclens", 0)
         )
         dstats = _doclens_sums(_read_doclens(spark, base, 0))
         _write_stats_delta(
             spark,
-            _stats_dir(base, 0),
+            _gen_dir(base, "stats", 0),
             dstats["n"],
             int(dstats["s"] or 0),
             int(dstats["st"] or 0),
@@ -589,10 +556,10 @@ def search_index_build(
     def _post_chain() -> None:
         _layout(postings, ["tb"], files_per_partition, "term").write.mode(
             "overwrite"
-        ).partitionBy("tb").parquet(_postings_dir(base, 0))
+        ).partitionBy("tb").parquet(_gen_dir(base, "postings", 0))
         _write_terms(
             _read_postings(spark, base, 0, positions),
-            _terms_dir(base, 0),
+            _gen_dir(base, "terms", 0),
             "overwrite",
         )
 
@@ -661,7 +628,7 @@ def _reader_snapshot(spark: SparkSession, base: str) -> _Snapshot:
         gen, tomb_gen = snap.gen, snap.tomb_gen
     else:
         gen, tomb_gen, _ = _state(spark, base)
-    stats_ls = _listing(spark, _stats_dir(base, gen))
+    stats_ls = _listing(spark, _gen_dir(base, "stats", gen))
     if (commits_ls, stats_ls) == token[1:]:
         stats = snap[6:]
     else:
@@ -696,7 +663,7 @@ def _live_postings(
         F.col("tb").isin(buckets) & F.col("term").isin(kws)
     )
     return _anti_tombstones(
-        post, _load_tombstones(spark, base, snap.tomb_gen), "doc_id"
+        post, _load_tombstones(spark, base, snap.tomb_gen, "doc_id"), "doc_id"
     )
 
 
@@ -987,30 +954,8 @@ def search_index_append(
     gen, tomb_gen, _ = _state(spark, base)
 
     new_ids = new_docs.select(F.col(id_col).alias("doc_id")).distinct()
-    tombs = _load_tombstones(spark, base, tomb_gen)
-    conflicts = []
-    if tombs is not None:
-        conflicts.append(tombs.select("doc_id", F.lit("dead").alias("_why")))
-    if assert_unique:
-        conflicts.append(
-            _read_doclens(spark, base, gen).select(
-                "doc_id", F.lit("live").alias("_why")
-            )
-        )
-
-    def _guard_hits() -> dict:
-        if not conflicts:
-            return {}
-        existing = conflicts[0]
-        for c in conflicts[1:]:
-            existing = existing.unionByName(c)
-        return {
-            r["_why"]: r["n"]
-            for r in existing.join(F.broadcast(new_ids), "doc_id", "semi")
-            .groupBy("_why")
-            .agg(F.countDistinct("doc_id").alias("n"))
-            .collect()
-        }
+    tombs = _load_tombstones(spark, base, tomb_gen, "doc_id")
+    live_ids = _read_doclens(spark, base, gen) if assert_unique else None
 
     postings, doclens = _tokenized(
         new_docs, id_col, text_col, n_buckets, analyzer, positions, title_len
@@ -1026,40 +971,41 @@ def search_index_append(
     #     into the returned receipt manifest — without the checkpoints
     #     the tokenize pipeline would run three times per append
     hits, doclens, postings = _run_concurrent(
-        _guard_hits,
+        lambda: _id_guard(new_ids, tombs, live_ids, "doc_id"),
         lambda: doclens.localCheckpoint(eager=True),
         lambda: postings.localCheckpoint(eager=True),
     )
-    if conflicts:
-        if hits.get("dead"):
-            raise TombstonedIdsError(
-                f"search_index_append: {hits['dead']} incoming id(s) are "
-                f"tombstoned — their dead rows still live in the index; run "
-                f"search_index_compact to reclaim them, then re-insert"
-            )
-        if hits.get("live"):
-            raise DuplicateIdsError(
-                f"search_index_append: {hits['live']} incoming id(s) already "
-                f"present in the index's doclens (a torn append counts — its "
-                f"ids land in doclens first) — duplicate ids double-count "
-                f"stats; run search_index_compact to heal a torn store, or "
-                f"pass assert_unique=False only with an external uniqueness "
-                f"guarantee"
-            )
+    if hits.get("dead"):
+        raise TombstonedIdsError(
+            f"search_index_append: {hits['dead']} incoming id(s) are "
+            f"tombstoned — their dead rows still live in the index; run "
+            f"search_index_compact to reclaim them, then re-insert"
+        )
+    if hits.get("live"):
+        raise DuplicateIdsError(
+            f"search_index_append: {hits['live']} incoming id(s) already "
+            f"present in the index's doclens (a torn append counts — its "
+            f"ids land in doclens first) — duplicate ids double-count "
+            f"stats; run search_index_compact to heal a torn store, or "
+            f"pass assert_unique=False only with an external uniqueness "
+            f"guarantee"
+        )
 
     # doclens FIRST, postings second, terms third, stats last (module
     # docstring: every prefix-crash under-reports only; fsck flags it)
-    doclens.coalesce(1).write.mode("append").parquet(_doclens_dir(base, gen))
+    doclens.coalesce(1).write.mode("append").parquet(
+        _gen_dir(base, "doclens", gen)
+    )
     _layout(postings, ["tb"], 1, "term").write.mode("append").partitionBy(
         "tb"
-    ).parquet(_postings_dir(base, gen))
+    ).parquet(_gen_dir(base, "postings", gen))
     # batch-distinct dictionary delta: duplicates against the existing
     # dictionary are allowed (readers distinct()), compact dedups
-    _write_terms(postings, _terms_dir(base, gen), "append")
+    _write_terms(postings, _gen_dir(base, "terms", gen), "append")
     dstats = _doclens_sums(doclens)
     _write_stats_delta(
         spark,
-        _stats_dir(base, gen),
+        _gen_dir(base, "stats", gen),
         dstats["n"],
         int(dstats["s"] or 0),
         int(dstats["st"] or 0),
@@ -1088,43 +1034,27 @@ def search_index_delete(
     exact).  Returns the one-row receipt."""
     base = _base(index_dir, version)
     gen, tomb_gen, _ = _state(spark, base)
-    tdir = _tomb_dir(base, tomb_gen)
-
-    req = sorted({int(i) for i in delete_ids})
-    existing = _load_tombstones(spark, base, tomb_gen)
-    n_existing, already = 0, set()
-    if existing is not None:
-        # ONE pass over the log: its distinct size (the receipt total is
-        # that plus the fresh ids, which are disjoint from it) and which
-        # requested ids it already holds
-        seen = existing.agg(
-            F.countDistinct("doc_id").alias("n"),
-            F.collect_set(
-                F.when(F.col("doc_id").isin(req), F.col("doc_id"))
-            ).alias("hit"),
-        ).first()
-        n_existing, already = int(seen["n"]), set(seen["hit"])
-    # bounded: ≤ |delete_ids|, reused below as literal rows
-    fresh_rows = [(i,) for i in req if i not in already]
+    # only ids the log does not hold yet are appended (bounded by the
+    # request, reused below as literal rows)
+    fresh, total = _append_tombstones(
+        spark, base, tomb_gen, "doc_id", delete_ids
+    )
     n_new = 0
-    if fresh_rows:
+    if fresh:
         # dl/dl_t lookup for the genuinely-new dead ids (tombstone-sized
         # broadcast semi-join against doclens)
         dead = _doclens_sums(
             _read_doclens(spark, base, gen).join(
-                F.broadcast(_local_rows(spark, _TOMBS_DDL, fresh_rows)),
+                F.broadcast(_local_rows(spark, "doc_id long", fresh)),
                 "doc_id",
                 "semi",
             )
         )
         n_new = int(dead["n"])
-        _local_rows(spark, _TOMBS_DDL, fresh_rows).coalesce(1).write.mode(
-            "append"
-        ).parquet(tdir)
         if n_new:
             _write_stats_delta(
                 spark,
-                _stats_dir(base, gen),
+                _gen_dir(base, "stats", gen),
                 -n_new,
                 -int(dead["s"] or 0),
                 -int(dead["st"] or 0),
@@ -1133,7 +1063,7 @@ def search_index_delete(
         spark,
         "n_tombstones_added long, n_tombstones_total long, "
         "n_live_docs_removed long",
-        [(len(fresh_rows), n_existing + len(fresh_rows), n_new)],
+        [(len(fresh), total, n_new)],
     )
 
 
@@ -1169,7 +1099,7 @@ def search_index_compact(
     _, _, positions, _title_len = _meta(spark, base)
     gen, tomb_gen, seq = _state(spark, base)
     new_gen = gen + 1
-    tombs = _load_tombstones(spark, base, tomb_gen)
+    tombs = _load_tombstones(spark, base, tomb_gen, "doc_id")
 
     post_live = _anti_tombstones(
         _read_postings(spark, base, gen, positions), tombs, "doc_id"
@@ -1196,18 +1126,18 @@ def search_index_compact(
     # is the slower chain, not the sum of four sequential jobs.
     def _lens_chain() -> None:
         lens_ok.coalesce(files_per_partition).write.mode("overwrite").parquet(
-            _doclens_dir(base, new_gen)
+            _gen_dir(base, "doclens", new_gen)
         )
         # the stats write is an APPEND (the shared delta-log writer); a
         # compact retried after a pre-commit crash would otherwise stack
         # a second row into the orphaned stats_g{new_gen} and commit a
         # store with doubled N/sum_dl — clear the target first so the
         # retry is idempotent like the three overwrite components
-        _fs_delete(spark, _stats_dir(base, new_gen))
+        _fs_delete(spark, _gen_dir(base, "stats", new_gen))
         dstats = _doclens_sums(_read_doclens(spark, base, new_gen))
         _write_stats_delta(
             spark,
-            _stats_dir(base, new_gen),
+            _gen_dir(base, "stats", new_gen),
             dstats["n"],
             int(dstats["s"] or 0),
             int(dstats["st"] or 0),
@@ -1216,29 +1146,21 @@ def search_index_compact(
     def _post_chain() -> None:
         _layout(post_ok, ["tb"], files_per_partition, "term").write.mode(
             "overwrite"
-        ).partitionBy("tb").parquet(_postings_dir(base, new_gen))
+        ).partitionBy("tb").parquet(_gen_dir(base, "postings", new_gen))
         _write_terms(
             _read_postings(spark, base, new_gen, positions),
-            _terms_dir(base, new_gen),
+            _gen_dir(base, "terms", new_gen),
             "overwrite",
         )
 
     _run_concurrent(_lens_chain, _post_chain)
 
-    unreadable = _verify_readable(
-        spark,
-        _postings_dir(base, new_gen),
-        _doclens_dir(base, new_gen),
-        _stats_dir(base, new_gen),
+    new_dirs = [
+        _gen_dir(base, c, new_gen) for c in ("postings", "doclens", "stats")
+    ]
+    _commit_generation(
+        spark, base, seq, new_gen, tomb_gen, new_dirs, "search_index_compact"
     )
-    if unreadable:
-        raise ValueError(
-            f"search_index_compact: new generation at {unreadable} is empty "
-            f"or unreadable (every row tombstoned?) — store left on the old "
-            f"generation; rebuild instead of compacting to empty"
-        )
-
-    _append_commit(spark, base, seq + 1, new_gen, tomb_gen + 1)
 
     return _bucket_manifest(
         _read_postings(spark, base, new_gen, positions)
@@ -1256,27 +1178,10 @@ def search_index_gc(
     generation have drained (a reader that resolved the manifest
     before the compact commit still scans the old directories).
     Returns the removed names."""
-    import re
-
     base = _base(index_dir, version)
     gen, tomb_gen, _ = _state(spark, base)
-    keep = {
-        "_meta", "_commits",
-        _postings_dir(base, gen).rsplit("/", 1)[-1],
-        _doclens_dir(base, gen).rsplit("/", 1)[-1],
-        _terms_dir(base, gen).rsplit("/", 1)[-1],
-        _stats_dir(base, gen).rsplit("/", 1)[-1],
-        _tomb_dir(base, tomb_gen).rsplit("/", 1)[-1],
-    }
-    collectable = re.compile(
-        r"^(postings|doclens|terms|stats)(_g\d+)?$|^tombstones(_t\d+)?$"
-    )
-    removed = []
-    for name in _fs_list(spark, base):
-        if name not in keep and collectable.match(name):
-            _fs_delete(spark, f"{base}/{name}")
-            removed.append(name)
-    return sorted(removed)
+    keep = [_gen_dir(base, c, gen) for c in _COMPONENTS]
+    return _gc_generations(spark, base, keep + [_tomb_dir(base, tomb_gen)])
 
 
 # ---------------------------------------------------------------------------
@@ -1378,7 +1283,7 @@ def search_index_fsck(
     )
     # the stats log tracks the LIVE corpus; compare against doclens
     # minus tombstones
-    tombs = _load_tombstones(spark, base, tomb_gen)
+    tombs = _load_tombstones(spark, base, tomb_gen, "doc_id")
     dl_live = (
         _doclens_sums(_anti_tombstones(lens, tombs, "doc_id"))
         if tombs is not None
@@ -1426,7 +1331,7 @@ def search_index_stats(
     _, _, _has_pos, _title_len = _meta(spark, base)
     gen, tomb_gen, _ = _state(spark, base)
     post = _read_postings(spark, base, gen, _has_pos)
-    tombs = _load_tombstones(spark, base, tomb_gen)
+    tombs = _load_tombstones(spark, base, tomb_gen, "doc_id")
     live = _anti_tombstones(post, tombs, "doc_id")
 
     phys = post.groupBy("tb").agg(F.count(F.lit(1)).alias("n_postings_physical"))
@@ -1498,9 +1403,9 @@ def search_index_maintain(
         .join(pids.distinct(), "doc_id", "left_anti")
         .count()
     )
-    tombs = _load_tombstones(spark, base, tomb_gen)
+    tombs = _load_tombstones(spark, base, tomb_gen, "doc_id")
     n_docs = lens.count()
-    n_dead = 0 if tombs is None else tombs.distinct().count()
+    n_dead = _count_tombstones(tombs)
     dead_ratio = n_dead / max(n_docs, 1)
     stats_df = _read_stats(spark, base, gen)
     stats_rows = stats_df.count()
@@ -1515,7 +1420,7 @@ def search_index_maintain(
         or int(s["s"] or 0) != int(live["s"] or 0)
         or int(s["st"] or 0) != int(live["st"] or 0)
     )
-    max_files = _max_files(spark, _postings_dir(base, gen), 1)
+    max_files = _max_files(spark, _gen_dir(base, "postings", gen), 1)
 
     reasons = []
     if torn > 0:

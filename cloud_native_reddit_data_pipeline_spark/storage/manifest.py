@@ -1,13 +1,23 @@
 """Generation-manifest commit protocol shared by the persistent stores.
 
-Three stores persist mutable state as immutable parquet directory
+Four stores persist mutable state as immutable parquet directory
 generations with a single append-only ``_commits`` manifest as the
-commit point: the ANN index (`operators/ann_index.py`), the MinHash-LSH
-dedup index (`operators/dedup_index.py`), and the versioned snapshot
-store (`streaming/snapshots.py`).  This module is the protocol they all
-consume — promoted out of ann_index (round-12 refactor) so the contract
-is pinned by its own unit tests (tests/test_storage_manifest.py), not
-only transitively through the stores.
+commit point: the BM25 search index (`operators/search_index.py`), the
+ANN index (`operators/ann_index.py`), the MinHash-LSH dedup index
+(`operators/dedup_index.py`), and the versioned snapshot store
+(`streaming/snapshots.py`).  This module is the protocol they all
+consume, pinned by its own unit tests (tests/test_storage_manifest.py),
+not only transitively through the stores.
+
+The three indexes also share one copy of the generation-store toolkit:
+directory names (`gen_dir`, `tomb_dir`), the LSM delete log
+(`load_tombstones`, `anti_tombstones`, `append_tombstones`,
+`count_tombstones`), the append id guard (`guard_hits`), the compact
+commit (`commit_generation`) and reclamation (`gc_generations`,
+`reset_version_dir`).  Each store keeps its layouts, its append write
+order (doclens → postings, bands → sigs), maintain signals, fsck and
+(search) the reader snapshot.  The snapshot store uses only the commit
+row (``gen`` = base generation, ``tomb_gen`` = horizon) and its own GC.
 
 The protocol (the Iceberg/Delta commit pattern, miniaturized):
 
@@ -41,6 +51,7 @@ file://, hdfs:// and s3a:// schemes.
 from __future__ import annotations
 
 import logging
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,9 +80,14 @@ def try_read_parquet(spark: SparkSession, path: str) -> DataFrame | None:
     visibility is identical on file://, hdfs:// and s3a:// store dirs.
     Schema resolution is forced: a driver-side file listing plus a
     footer read, which Spark runs as a one-task job (``parquet at
-    <unknown>:0``, ~25-30 ms); no data pages are scanned.  Readers that
-    know a component's schema use `read_parquet_pinned` instead, which
-    runs no job."""
+    <unknown>:0``, ~25-30 ms); no data pages are scanned.
+
+    Only two kinds of caller remain: the snapshot store's ``log`` and
+    ``base_g*`` reads, whose schema is the user's changelog schema, and
+    `verify_readable`, where a file-less directory must read as None.
+    Every store state with a fixed schema (manifests, _meta, tombstone
+    logs, retention watermarks, index components) is read through
+    `read_parquet_pinned`, which runs no job."""
     from pyspark.errors import AnalysisException
 
     try:
@@ -293,14 +309,164 @@ def append_commit(
         )
 
 
-# Directory names a rebuild owns and may clear: every store component
-# that is generation-addressed (the union across the three stores) plus
-# the manifest itself.  Config-like one-offs (centroids, codebook,
-# _meta) are NOT collectable — a rebuild overwrites them in place.
-_COLLECTABLE = (
-    r"^(cells|codes|sigs|bands|postings|doclens|stats)(_g\d+)?$"
-    r"|^tombstones(_t\d+)?$|^_commits$"
+# Every generation-addressed index component (search, ANN, dedup).
+# `gen_dir` accepts no other name, so GC and rebuild collect every
+# component a store writes.  One-offs (centroids, codebook, _meta) are
+# overwritten in place by a rebuild.
+GENERATION_COMPONENTS = (
+    "postings", "doclens", "terms", "stats",  # search index
+    "cells", "codes",  # ANN index
+    "sigs", "bands",  # dedup index
 )
+_GENERATIONS = (
+    rf"^({'|'.join(GENERATION_COMPONENTS)})(_g\d+)?$|^tombstones(_t\d+)?$"
+)
+# a rebuild also clears the manifest; GC never does
+_COLLECTABLE = _GENERATIONS + r"|^_commits$"
+
+
+def gen_dir(base: str, name: str, gen: int) -> str:
+    """Directory of component `name` in generation `gen`: the bare name
+    for the build's generation 0, ``{name}_g{gen}`` for each compacted
+    one."""
+    if name not in GENERATION_COMPONENTS:
+        raise ValueError(f"gen_dir: {name!r} is not in GENERATION_COMPONENTS")
+    return f"{base}/{name}" + (f"_g{gen}" if gen else "")
+
+
+def tomb_dir(base: str, tomb_gen: int) -> str:
+    """Directory of the append-only delete log of tombstone generation
+    `tomb_gen` (every compact starts a fresh, directory-less one)."""
+    return f"{base}/tombstones" + (f"_t{tomb_gen}" if tomb_gen else "")
+
+
+def load_tombstones(
+    spark: SparkSession, base: str, tomb_gen: int, id_col: str
+) -> DataFrame | None:
+    """The delete log as a fixed-schema ``{id_col} long`` frame (no
+    inference job), or None before the first delete of this tombstone
+    generation.  Not deduplicated: count it with `count_tombstones`."""
+    return read_parquet_pinned(spark, tomb_dir(base, tomb_gen), f"{id_col} long")
+
+
+def anti_tombstones(
+    df: DataFrame, tombs: DataFrame | None, id_col: str
+) -> DataFrame:
+    """Drop rows of `df` whose `id_col` is in the (pre-loaded,
+    tombstone-sized, broadcast) delete log."""
+    if tombs is None:
+        return df
+    return df.join(
+        F.broadcast(tombs.toDF("_dead")), df[id_col] == F.col("_dead"), "left_anti"
+    )
+
+
+def count_tombstones(tombs: DataFrame | None) -> int:
+    """Distinct ids in a loaded delete log (0 before the first
+    delete) — a repeated id counts once."""
+    if tombs is None:
+        return 0
+    return int(tombs.agg(F.countDistinct(tombs.columns[0])).first()[0])
+
+
+def guard_hits(
+    new_ids: DataFrame,
+    tombs: DataFrame | None,
+    live_ids: DataFrame | None,
+    id_col: str,
+) -> dict:
+    """The append id guard: ``{"dead": n, "live": n}``, the DISTINCT
+    incoming ids (`new_ids`, column `id_col`) that the delete log
+    `tombs` or the live ids `live_ids` (None = unchecked) already hold;
+    a zero count has no key.  One Spark job (a union semi-joined
+    against the broadcast incoming ids), none with nothing to check."""
+    conflicts = []
+    if tombs is not None:
+        conflicts.append(tombs.select(id_col, F.lit("dead").alias("_why")))
+    if live_ids is not None:
+        conflicts.append(live_ids.select(id_col, F.lit("live").alias("_why")))
+    if not conflicts:
+        return {}
+    return {
+        r["_why"]: r["n"]
+        for r in reduce(DataFrame.unionByName, conflicts)
+        .join(F.broadcast(new_ids), id_col, "semi")
+        .groupBy("_why")
+        .agg(F.countDistinct(id_col).alias("n"))
+        .collect()
+    }
+
+
+def append_tombstones(
+    spark: SparkSession, base: str, tomb_gen: int, id_col: str, ids
+) -> tuple[list[tuple[int]], int]:
+    """Append the requested `ids` the delete log does not hold yet (a
+    repeated delete appends nothing).  Returns ``(fresh, total)``: the
+    appended ids as one-tuples (for `local_rows_df`) and the log's
+    distinct size after the append.  One pass over the log finds its
+    distinct size and the requested ids it holds; fresh ids are
+    disjoint from it, so the total needs no re-read."""
+    req = sorted({int(i) for i in ids})
+    existing = load_tombstones(spark, base, tomb_gen, id_col)
+    n_existing, already = 0, set()
+    if existing is not None:
+        seen = existing.agg(
+            F.countDistinct(id_col).alias("n"),
+            F.collect_set(
+                F.when(F.col(id_col).isin(req), F.col(id_col))
+            ).alias("hit"),
+        ).first()
+        n_existing, already = int(seen["n"]), set(seen["hit"])
+    fresh = [(i,) for i in req if i not in already]
+    if fresh:
+        local_rows_df(spark, f"{id_col} long", fresh).coalesce(1).write.mode(
+            "append"
+        ).parquet(tomb_dir(base, tomb_gen))
+    return fresh, n_existing + len(fresh)
+
+
+def commit_generation(
+    spark: SparkSession, base: str, seq: int, new_gen: int, tomb_gen: int,
+    dirs: list[str], verb: str,
+) -> None:
+    """Commit a compacted generation: gate on `verify_readable` over
+    its `dirs`, then THE commit from the resolved (`seq`, `tomb_gen`)
+    to (`new_gen`, ``tomb_gen + 1``) — the fresh tombstone generation
+    has no directory, which IS the delete-log truncation.  A file-less
+    directory (every row tombstoned) raises ValueError in `verb`'s name
+    and leaves the store on its old generation."""
+    unreadable = verify_readable(spark, *dirs)
+    if unreadable:
+        raise ValueError(
+            f"{verb}: new generation at {unreadable} is empty or unreadable "
+            f"(every row tombstoned?) — store left on the old generation; "
+            f"rebuild instead of compacting to empty"
+        )
+    append_commit(spark, base, seq + 1, new_gen, tomb_gen + 1)
+
+
+def _drop_matching(
+    spark: SparkSession, base: str, pattern: str, keep_names=()
+) -> list[str]:
+    import re
+
+    matcher = re.compile(pattern)
+    keep = {k.rsplit("/", 1)[-1] for k in keep_names}
+    removed = []
+    for name in fs_list(spark, base):
+        if name not in keep and matcher.match(name):
+            fs_delete(spark, f"{base}/{name}")
+            removed.append(name)
+    return sorted(removed)
+
+
+def gc_generations(spark: SparkSession, base: str, keep_names) -> list[str]:
+    """Delete every generation and tombstone directory under `base`
+    except `keep_names` (paths or bare names of the committed
+    generation's directories); returns the removed names.  ``_commits``
+    and one-off directories are never collected.  Run it only after
+    readers of the old generation have drained."""
+    return _drop_matching(spark, base, _GENERATIONS, keep_names)
 
 
 def reset_version_dir(spark: SparkSession, base: str) -> None:
@@ -312,12 +478,7 @@ def reset_version_dir(spark: SparkSession, base: str) -> None:
     build would be silently invisible (and collectable by GC).
     Rebuild-in-place is still not concurrent-safe with live probes;
     use a fresh ``version`` key for zero-downtime rebuilds."""
-    import re
-
-    collectable = re.compile(_COLLECTABLE)
-    for name in fs_list(spark, base):
-        if collectable.match(name):
-            fs_delete(spark, f"{base}/{name}")
+    _drop_matching(spark, base, _COLLECTABLE)
 
 
 def repartition_for_layout(

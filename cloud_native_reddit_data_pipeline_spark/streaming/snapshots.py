@@ -82,6 +82,7 @@ from ..storage.manifest import (
     fs_list as _fs_list,
     local_rows_df as _local_rows,
     manifest_state as _state,
+    read_parquet_pinned as _read_pinned,
     repartition_for_layout as _layout,
     try_read_parquet as _try_read,
 )
@@ -91,6 +92,11 @@ from ..storage.manifest import (
 # semantics never see it).  Fixed at store-creation time, like the CDC
 # sink's n_buckets.
 N_LOOKUP_BUCKETS = 16
+
+# fixed schemas of the store's own state (the log and base_g* carry the
+# user's changelog schema and keep schema inference)
+_SNAPSHOTS_DDL = "snap int, n_rows long, batch_id string"
+_RETENTION_DDL = "watermark long"
 
 
 class EmptyFoldError(ValueError):
@@ -116,7 +122,10 @@ class UnsafeWatermarkError(ValueError):
 
 
 def _manifest(spark: SparkSession, store_dir: str) -> DataFrame | None:
-    return _try_read(spark, f"{store_dir}/_snapshots")
+    """The ``_snapshots`` manifest with its fixed schema, or None before
+    the first commit (a directory a crashed first commit left without a
+    data file reads as an empty frame)."""
+    return _read_pinned(spark, f"{store_dir}/_snapshots", _SNAPSHOTS_DDL)
 
 
 def current_snapshot(spark: SparkSession, store_dir: str) -> int:
@@ -136,13 +145,15 @@ def _base_state(spark: SparkSession, store_dir: str) -> tuple[int, int]:
 
 def _retention_watermark(spark: SparkSession, store_dir: str) -> int | None:
     """The active seq retention watermark (max over the append-only
-    ``_retention`` log), or None when no retention compact has run.
-    No Spark job at all on stores that never configured retention
-    (the directory probe is driver-side)."""
-    r = _try_read(spark, f"{store_dir}/_retention")
+    ``_retention`` log), or None when no retention compact has run —
+    including a log directory that a crashed first write left without
+    a data file.  No Spark job at all on stores that never configured
+    retention (the directory probe is driver-side)."""
+    r = _read_pinned(spark, f"{store_dir}/_retention", _RETENTION_DDL)
     if r is None:
         return None
-    return int(r.agg(F.max("watermark")).first()[0])
+    wm = r.agg(F.max("watermark")).first()[0]
+    return None if wm is None else int(wm)
 
 
 def snapshot_commit(
@@ -221,7 +232,7 @@ def snapshot_commit(
         n = landed.count()
     # THE commit point: one single-row manifest append
     _local_rows(
-        spark, "snap int, n_rows long, batch_id string", [(snap, n, batch_id)]
+        spark, _SNAPSHOTS_DDL, [(snap, n, batch_id)]
     ).coalesce(1).write.mode("append").parquet(f"{store_dir}/_snapshots")
     return snap
 
@@ -457,7 +468,7 @@ def compact_snapshots(
     if drop_tombstones_below_seq is not None:
         # watermark BEFORE the flip (see docstring: both crash halves safe)
         _local_rows(
-            spark, "watermark long", [(int(drop_tombstones_below_seq),)]
+            spark, _RETENTION_DDL, [(int(drop_tombstones_below_seq),)]
         ).coalesce(1).write.mode("append").parquet(f"{store_dir}/_retention")
     # THE commit: (gen, horizon) flip in one manifest append.  The old
     # base and the folded log partitions stay on disk for reader grace

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from cloud_native_reddit_data_pipeline_spark.operators import ann_index, similarity
 from cloud_native_reddit_data_pipeline_spark.sources.tables import load
+from cloud_native_reddit_data_pipeline_spark.storage import manifest as sm
 
 SF = "/root/testdata/sf0.001"
 QIDS = [3, 4, 5]
@@ -280,6 +281,18 @@ def test_delete_tombstones_then_compact_reclaims(spark, tmp_path):
     dead = list(range(100, 150))
     receipt = ann_index.ann_index_delete(spark, idx, dead).collect()[0]
     assert (receipt["n_tombstones_added"], receipt["n_tombstones_total"]) == (50, 50)
+    # a repeated delete appends nothing
+    again = ann_index.ann_index_delete(spark, idx, dead[:10]).collect()[0]
+    assert (again["n_tombstones_added"], again["n_tombstones_total"]) == (0, 50)
+    # a log that already holds a repeated id (written before deletes
+    # deduped) still counts each dead id once
+    sm.local_rows_df(spark, "vec_id long", [(100,)]).write.mode(
+        "append"
+    ).parquet(f"{idx}/v1/tombstones")
+    st = ann_index.ann_index_stats(spark, idx)
+    assert st.agg(F.sum("n_dead"), F.sum("n_rows")).first() == (50, 500)
+    rec = ann_index.ann_index_maintain(spark, idx).collect()[0]
+    assert (rec["action"], rec["n_dead"]) == ("noop", 50)
 
     live = emb.filter(~F.col("vec_id").isin(dead))
     fused = similarity.ivf_topk(live, QIDS, k=5, n_centroids=16, n_probe=4)
@@ -345,12 +358,12 @@ def test_compact_crash_before_commit_leaves_old_generation(spark, tmp_path, monk
         map(tuple, ann_index.ann_index_probe_pq(spark, idx, QIDS).collect())
     )
 
-    real_commit = ann_index._append_commit
+    real_commit = sm.append_commit
 
     def crash(*a, **kw):
         raise RuntimeError("simulated crash at the commit point")
 
-    monkeypatch.setattr(ann_index, "_append_commit", crash)
+    monkeypatch.setattr(sm, "append_commit", crash)
     with pytest.raises(RuntimeError, match="simulated crash"):
         ann_index.ann_index_compact(spark, idx)
     # reader view is untouched: old generation + tombstones still serve
@@ -361,7 +374,7 @@ def test_compact_crash_before_commit_leaves_old_generation(spark, tmp_path, monk
         map(tuple, ann_index.ann_index_probe_pq(spark, idx, QIDS).collect())
     ) == before_pq
 
-    monkeypatch.setattr(ann_index, "_append_commit", real_commit)
+    monkeypatch.setattr(sm, "append_commit", real_commit)
     manifest = ann_index.ann_index_compact(spark, idx).collect()
     assert sum(r["n_vectors"] for r in manifest) == 500 - 40
     assert sorted(
@@ -499,7 +512,7 @@ def test_gc_reclaims_orphaned_generations(spark, tmp_path, monkeypatch):
     emb = load(spark, SF, "embeddings")
     ann_index.ann_index_build(emb, idx)
     ann_index.ann_index_delete(spark, idx, [400, 401])
-    monkeypatch.setattr(ann_index, "_fs_delete", lambda *a, **kw: None)
+    monkeypatch.setattr(sm, "fs_delete", lambda *a, **kw: None)
     ann_index.ann_index_compact(spark, idx)
     monkeypatch.undo()
     # superseded gen-0 dirs are orphaned on disk

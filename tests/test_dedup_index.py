@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from cloud_native_reddit_data_pipeline_spark.operators import dedup, dedup_index
 from cloud_native_reddit_data_pipeline_spark.sources.tables import load
+from cloud_native_reddit_data_pipeline_spark.storage import manifest as sm
 
 SF = "/root/testdata/sf0.001"
 
@@ -146,6 +147,16 @@ def test_delete_then_compact_preserves_probes(spark, tmp_path):
     assert before
     victims = sorted({r[1] for r in before})[:2]
     dedup_index.dedup_index_delete(spark, idx, victims).collect()
+    # a repeated delete appends nothing
+    again = dedup_index.dedup_index_delete(spark, idx, victims).collect()[0]
+    assert (again["n_tombstones_added"], again["n_tombstones_total"]) == (0, 2)
+    # a log that already holds a repeated id (written before deletes
+    # deduped) still counts each dead id once
+    sm.local_rows_df(spark, "doc_id long", [(victims[0],)]).write.mode(
+        "append"
+    ).parquet(f"{idx}/v1/tombstones")
+    rec = dedup_index.dedup_index_maintain(spark, idx).collect()[0]
+    assert (rec["action"], rec["n_dead"]) == ("noop", 2)
     after = _sorted(dedup_index.dedup_index_probe(spark, probe_docs, idx, min_agree=4))
     assert after == [r for r in before if r[1] not in victims]
     dedup_index.dedup_index_compact(spark, idx).collect()
@@ -174,7 +185,7 @@ def test_compact_crash_before_commit_leaves_old_generation(
     def crash(*a, **kw):
         raise RuntimeError("simulated crash before manifest commit")
 
-    monkeypatch.setattr(dedup_index, "_append_commit", crash)
+    monkeypatch.setattr(sm, "append_commit", crash)
     with pytest.raises(RuntimeError, match="simulated crash"):
         dedup_index.dedup_index_compact(spark, idx)
     monkeypatch.undo()
@@ -256,7 +267,7 @@ def test_gc_reclaims_orphaned_generations(spark, tmp_path, monkeypatch):
     idx = str(tmp_path / "idx")
     dedup_index.dedup_index_build(docs.filter("doc_id % 10 != 0"), idx).collect()
     dedup_index.dedup_index_delete(spark, idx, [8, 12]).collect()
-    monkeypatch.setattr(dedup_index, "_fs_delete", lambda *a, **kw: None)
+    monkeypatch.setattr(sm, "fs_delete", lambda *a, **kw: None)
     dedup_index.dedup_index_compact(spark, idx).collect()
     monkeypatch.undo()
     names = set(os.listdir(f"{idx}/v1"))

@@ -26,6 +26,7 @@ from cloud_native_reddit_data_pipeline_spark.operators import search_index as si
 from cloud_native_reddit_data_pipeline_spark.operators.textstats import (
     ranked_keyword_search_bm25,
 )
+from cloud_native_reddit_data_pipeline_spark.storage import manifest as sm
 
 KW = ["join", "spark", "stream", "window"]
 
@@ -603,7 +604,7 @@ def test_compact_retry_after_precommit_crash_is_exact(
     def _boom(*a, **k):
         raise RuntimeError("injected crash before the compact commit")
 
-    monkeypatch.setattr(si, "_append_commit", _boom)
+    monkeypatch.setattr(sm, "append_commit", _boom)
     with pytest.raises(RuntimeError, match="injected"):
         si.search_index_compact(spark, idx)
     monkeypatch.undo()
@@ -711,6 +712,9 @@ def test_snapshot_follows_every_write_verb(spark, docs, tmp_path):
     rebuilt = docs.filter("doc_id % 2 = 0")
     si.search_index_build(rebuilt, idx).collect()
     _query_matches_scan(spark, idx, rebuilt)
+    # the rebuild over a compacted store leaves no stale generation
+    names = sm.fs_list(spark, f"{idx}/v1")
+    assert not [n for n in names if "_g" in n or "_t" in n], names
 
 
 def test_snapshot_sees_store_swapped_on_disk(spark, docs, tmp_path):

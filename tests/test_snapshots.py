@@ -538,6 +538,17 @@ def test_store_verbs_leave_cache_idle(spark, tmp_path):
         assert_cache_idle(spark, f"snapshot store {name}")
 
 
+def test_retention_watermark_ignores_fileless_log(spark, tmp_path):
+    """A crashed first retention write leaves ``_retention`` holding only
+    ``_temporary/``: no watermark is active (a NULL max must not reach
+    int()), and commits still go through."""
+    st = str(tmp_path / "store")
+    os.makedirs(f"{st}/_retention/_temporary/0")
+    assert snapshots._retention_watermark(spark, st) is None
+    b1, _, _ = _batches(spark)
+    assert snapshots.snapshot_commit(b1, st, "id", "seq", batch_id="b1") == 1
+
+
 def test_fsck_job_count_constant_in_commits(spark, tmp_path):
     """The single-pass fsck claim, measured: every on-disk count comes
     from ONE grouped pass over log/ and n_state from a FIXED sample, so

@@ -1,16 +1,23 @@
-"""storage/manifest.py: the generation-manifest commit protocol shared
-by the ANN index, the dedup index, and the snapshot store — pinned by
-its OWN unit tests (round-12 extraction), not only transitively through
-the stores.
+"""storage/manifest.py: the generation-manifest commit protocol and
+generation-store toolkit shared by the search, ANN and dedup indexes
+and the snapshot store — pinned by its OWN unit tests, not only
+transitively through the stores.
 
 - manifest_state resolves (0, 0, -1) on a fresh store and the max-seq
   row after commits
 - append_commit is append-only: earlier generations stay resolvable in
   the manifest history
 - try_read_parquet distinguishes missing / file-less / readable dirs
-- reset_version_dir clears exactly the collectable names
+- reset_version_dir clears exactly the collectable names (every
+  generation component, the search term dictionary included)
 - repartition_for_layout caps files per partitionBy directory
 - verify_readable flags file-less directories before a commit
+- gen_dir / tomb_dir name generations and refuse unknown components
+- load_tombstones is None before the first delete; guard_hits and
+  count_tombstones count a repeated id once
+- append_tombstones appends nothing on a repeated delete
+- commit_generation refuses a file-less generation without committing
+- gc_generations keeps _commits, _meta and the current generation
 """
 
 from __future__ import annotations
@@ -63,8 +70,8 @@ def test_verify_readable_flags_fileless_dirs(spark, tmp_path):
 def test_reset_version_dir_clears_only_collectables(spark, tmp_path):
     base = str(tmp_path / "store")
     for name in ("cells", "cells_g2", "codes", "sigs_g1", "bands",
-                 "tombstones", "tombstones_t3", "_commits",
-                 "centroids", "codebook", "_meta"):
+                 "tombstones", "tombstones_t3", "_commits", "terms",
+                 "terms_g1", "centroids", "codebook", "_meta"):
         spark.range(1).write.parquet(f"{base}/{name}")
     sm.reset_version_dir(spark, base)
     left = set(sm.fs_list(spark, base))
@@ -207,3 +214,74 @@ def test_local_rows_df_unexpected_errors_propagate(spark, monkeypatch):
     with pytest.raises(AttributeError, match="genuine bug"):
         sm.local_rows_df(spark, "a int, b int", [(1, 2)])
     monkeypatch.setattr(F, "element_at", real_element_at)
+
+
+def test_gen_dir_and_tomb_dir_naming():
+    import pytest
+
+    assert sm.gen_dir("b", "postings", 0) == "b/postings"
+    assert sm.gen_dir("b", "terms", 2) == "b/terms_g2"
+    assert sm.tomb_dir("b", 0) == "b/tombstones"
+    assert sm.tomb_dir("b", 3) == "b/tombstones_t3"
+    # a component outside the collectable list would leak on rebuild/gc
+    with pytest.raises(ValueError, match="GENERATION_COMPONENTS"):
+        sm.gen_dir("b", "centroids", 1)
+
+
+def test_load_tombstones_missing_then_present(spark, tmp_path):
+    base = str(tmp_path / "store")
+    assert sm.load_tombstones(spark, base, 0, "doc_id") is None
+    assert sm.count_tombstones(None) == 0
+    # a log holding a repeated id (as written before deletes deduped)
+    sm.local_rows_df(spark, "doc_id long", [(1,), (2,), (2,)]).write.parquet(
+        sm.tomb_dir(base, 0)
+    )
+    tombs = sm.load_tombstones(spark, base, 0, "doc_id")
+    assert tombs.columns == ["doc_id"] and tombs.count() == 3
+    assert sm.count_tombstones(tombs) == 2
+    live = sm.local_rows_df(spark, "doc_id long", [(5,), (5,)])
+    new = sm.local_rows_df(spark, "doc_id long", [(2,), (5,), (9,)])
+    assert sm.guard_hits(new, tombs, live, "doc_id") == {"dead": 1, "live": 1}
+    assert sm.guard_hits(new, None, None, "doc_id") == {}
+    kept = sm.anti_tombstones(new, tombs, "doc_id").collect()
+    assert sorted(r["doc_id"] for r in kept) == [5, 9]
+
+
+def test_append_tombstones_repeat_appends_nothing(spark, tmp_path):
+    base = str(tmp_path / "store")
+    assert sm.append_tombstones(spark, base, 0, "vec_id", [3, 1, 1]) == (
+        [(1,), (3,)], 2,
+    )
+    files = sm.fs_list(spark, sm.tomb_dir(base, 0))
+    assert sm.append_tombstones(spark, base, 0, "vec_id", [1, 3]) == ([], 2)
+    assert sm.fs_list(spark, sm.tomb_dir(base, 0)) == files
+    assert sm.append_tombstones(spark, base, 0, "vec_id", [3, 4]) == ([(4,)], 3)
+
+
+def test_commit_generation_refuses_fileless_dir(spark, tmp_path):
+    import pytest
+
+    base = str(tmp_path / "store")
+    sm.append_commit(spark, base, 0, 1, 1)
+    empty = str(tmp_path / "store" / "cells_g2")
+    os.makedirs(empty)
+    with pytest.raises(ValueError, match="x_compact: .*empty or unreadable"):
+        sm.commit_generation(spark, base, 0, 2, 1, [empty], "x_compact")
+    assert sm.manifest_state(spark, base) == (1, 1, 0)
+    spark.range(1).write.mode("overwrite").parquet(empty)
+    sm.commit_generation(spark, base, 0, 2, 1, [empty], "x_compact")
+    assert sm.manifest_state(spark, base) == (2, 2, 1)
+
+
+def test_gc_generations_keeps_manifest_meta_and_current(spark, tmp_path):
+    base = str(tmp_path / "store")
+    for name in ("_commits", "_meta", "centroids", "postings", "postings_g1",
+                 "terms", "terms_g1", "tombstones", "tombstones_t1"):
+        os.makedirs(f"{base}/{name}")
+    keep = [sm.gen_dir(base, c, 1) for c in ("postings", "terms")]
+    removed = sm.gc_generations(spark, base, keep + [sm.tomb_dir(base, 1)])
+    assert removed == ["postings", "terms", "tombstones"]
+    assert set(sm.fs_list(spark, base)) == {
+        "_commits", "_meta", "centroids", "postings_g1", "terms_g1",
+        "tombstones_t1",
+    }

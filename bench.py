@@ -261,8 +261,6 @@ HEADLINE = [
     "ann_nprobe_recall_curve",
     "ann_index_delete",
     "ann_index_fsck",
-    # round-11 additions
-    "ann_index_probe_dpp",
     # streaming_ann_serving_under_deletes and
     # streaming_golden_record_maintenance follow the streaming
     # replay-twin exclusion (fixed micro-batch fixtures; their cost
@@ -322,32 +320,24 @@ HEADLINE = [
     # streaming twin follow the capstone/streaming exclusions.
     "snapshot_store_time_travel",
     # round-12 additions: the ES multi_match analyzer behaviors
-    # (stemmed BM25, levenshtein fuzzy match) and the caller-vector DPP
-    # probe (the zero-driver-routing serving path for external query
-    # embeddings).  snapshot_store_retention follows the compaction-twin
-    # exclusion (its cost story is snapshot_store_time_travel + one
-    # compact, both represented).
+    # (stemmed BM25, levenshtein fuzzy match).  snapshot_store_retention
+    # follows the compaction-twin exclusion (its cost story is
+    # snapshot_store_time_travel + one compact, both represented).
     "ranked_search_stemmed",
     "fuzzy_keyword_search",
-    "ann_index_probe_vectors_dpp",
     # cell-pruned ADC off the persisted store (the FAISS serving shape;
     # probe_pq's corpus-wide-ADC twin is already benched)
     "ann_index_probe_ivfpq",
-    # ann_index_probe_vectors_filtered is correctness-gated only: its
-    # cost is the benched ann_index_probe_filtered with an external
-    # (byte-identical) query frame — same build-composite, same plan.
-    # round-13 additions: the IVF-PQ serving matrix completion — the
-    # caller-vector + double-DPP form is benched (it exercises the new
-    # cell-partitioned codes layout through DynamicPruningExpression on
-    # BOTH store scans); ann_index_probe_ivfpq_dpp and
-    # ann_index_probe_ivfpq_vectors are correctness-gated only (each is
-    # the same build-composite with a subset of this row's plan).
+    # ann_index_probe_filtered / _vectors_filtered and
+    # ann_index_probe_ivfpq_vectors are correctness-gated only: each is
+    # a benched probe plus a semi-join on the allowed ids and/or an
+    # external (byte-identical) query frame — same build-composite,
+    # same routing.
     # ann_index_maintain / dedup_index_maintain follow the lifecycle-
     # capstone exclusion: each is build + delete + compact + gc + probe,
     # every leg individually benched (annidx_*_only / dedupidx_*_only
     # rows isolate the per-verb serving costs); the maintain receipts
     # themselves are three metadata-cheap counts + one driver listing.
-    "ann_index_probe_ivfpq_vectors_dpp",
     # per-field boosted BM25 (title^2 most_fields) — the ES relevance
     # knob the round-12 verdict listed as the remaining search delta
     "ranked_search_fielded",
@@ -461,15 +451,10 @@ def bench_annidx_verbs(spark, sf_dir) -> dict[str, float]:
         for name, fn in (
             ("annidx_probe_only",
              lambda: ann_index.ann_index_probe(spark, idx, qids).count()),
-            ("annidx_probe_dpp_only",
-             lambda: ann_index.ann_index_probe_dpp(spark, idx, qids).count()),
             ("annidx_probe_pq_only",
              lambda: ann_index.ann_index_probe_pq(spark, idx, qids).count()),
             ("annidx_probe_ivfpq_only",
              lambda: ann_index.ann_index_probe_ivfpq(spark, idx, qids).count()),
-            ("annidx_probe_ivfpq_dpp_only",
-             lambda: ann_index.ann_index_probe_ivfpq_dpp(
-                 spark, idx, qids).count()),
         ):
             best = None
             for _ in range(2):

@@ -1,86 +1,72 @@
-"""Persistent ANN index: build once, probe many (round-10 hardening of
-the fused `similarity.ivf_topk` / `similarity.pq_adc_topk` forms).
+"""Persistent ANN index: build once, probe many — the persisted form of
+the fused `similarity.ivf_topk` / `pq_adc_topk` / `ivf_pq_topk`.
 
-Production ANN never re-derives its index per query — centroids, the
-inverted file, and the PQ codebook are built ONCE and persisted; a probe
-loads metadata and touches only the probed cells.  This module splits
-the fused operators into exactly that shape:
+Production ANN never re-derives its index per query: centroids, the
+inverted file and the PQ codebook are built ONCE and persisted, and a
+probe touches only the cells it routes to.  Store verbs: `ann_index_build`,
+`ann_index_append`, `ann_index_delete`, `ann_index_compact`,
+`ann_index_gc`, `ann_index_maintain`, `ann_index_stats`, `resolve_dirs`.
 
-- `ann_index_build`  — derive IVF centroids + cell assignments + PQ
-  codebook/codes from the corpus and persist all four artifacts as
-  parquet under ``{index_dir}/{version}/``; returns a per-cell manifest.
-- `ann_index_probe`  — IVF probe straight off the persisted artifacts:
-  centroid scoring on the (tiny) centroid table, **static partition
-  pruning** of the cell-partitioned inverted file down to the probed
-  cells, exact cosine re-rank.  Byte-identical to the fused
-  `similarity.ivf_topk` (pinned by tests/test_ann_index.py).
-- `ann_index_probe_dpp` — the same probe with the probe-cell set kept
-  as a DataFrame end-to-end: the inverted-file scan is pruned by
-  Spark's **dynamic partition pruning** (a DynamicPruningExpression on
-  the ``cell`` partition column, fed by the broadcast probe side)
-  instead of a driver-collected cell list.  Byte-identical to
-  `ann_index_probe`; the serving path with zero driver-side routing.
-  `ann_index_probe_vectors_dpp` is the same plan for CALLER-SUPPLIED
-  query vectors (the true serving case: fresh query embeddings that
-  never lived in the index), keeping them distributed end-to-end.
-- `ann_index_probe_pq` — ADC probe off the persisted codes + codebook,
-  no re-encode.  Byte-identical to `similarity.pq_adc_topk`.  The
-  per-query distance table is computed AS A SPARK EXPRESSION over the
-  broadcast codebook (exact decimal(30,12) arithmetic — the same e12
-  integers as the old driver-side Decimal loop it replaced), so driver
-  work is O(1), not O(|queries|).
+Three probe verbs, each byte-identical to its fused reference (pinned
+by tests/test_ann_index.py):
 
-Layout under ``{index_dir}/{version}/``::
+- `ann_index_probe` — IVF: centroid scoring, the probed cells of the
+  inverted file, exact cosine re-rank (`similarity.ivf_topk`).  An
+  ``allowed`` id frame makes it the filtered probe (metadata predicate
+  + vector search).
+- `ann_index_probe_ivfpq` — IVF-PQ: the same routing bounds the
+  candidates, PQ asymmetric distances off the persisted codes score
+  them (`similarity.ivf_pq_topk`).
+- `ann_index_probe_pq` — exhaustive ADC over every live code
+  (`similarity.pq_adc_topk`); no routing by design.
+
+Each takes ``queries`` as a list of member ids or as a caller
+(query_id, qv) frame of fresh embeddings.  The PQ distance table is one
+exact decimal(30,12) Spark expression over the broadcast codebook, so
+driver work is O(1) in the number of queries.
+
+One routing: dynamic partition pruning.  The probe-cell set stays a
+DataFrame; its broadcast join against the cell-partitioned inverted
+file (and, for IVF-PQ, a broadcast semi-join against the codes) lets
+Spark put a DynamicPruningExpression on the ``cell`` partition column,
+so a probe opens ``n_probe x |queries|`` cell directories at most and
+no routing list transits the driver.
+
+Layout under ``{index_dir}/{version}/`` — the column names are fixed;
+build and append take ``vec_id`` / ``embedding`` from their input::
 
     centroids/     (centroid_id BIGINT, cv ARRAY<FLOAT>)         ~KB
     cells/         (vec_id BIGINT, embedding ARRAY<FLOAT>)
                    partitioned by cell INT (the inverted file)
     codes/         (vec_id BIGINT, code0..code{m-1} INT)          4B/vec
-                   partitioned by cell INT (round-13: the PQ codes
-                   share the inverted layout, so the IVF-PQ probes
-                   prune code I/O on disk exactly like the vectors —
-                   PartitionFilters on the static path, a
-                   DynamicPruningExpression on the DPP path; the
-                   corpus-wide `ann_index_probe_pq` is unaffected,
-                   its exhaustive ADC is the semantics)
+                   partitioned by cell INT (the inverted layout)
     codebook/      (sub INT, code INT, vals ARRAY<DECIMAL(9,6)>)  ~KB
     tombstones/    (vec_id BIGINT)  — append-only delete log
     _commits/      (seq BIGINT, gen INT, tomb_gen INT) — generation
-                   manifest (see below); absent until the first
-                   compaction / tombstone rewrite
+                   manifest; absent until the first compaction
+
+Every component but ``codes`` is read with its fixed schema, so no
+footer-inference job runs.  The codes width ``m`` is the codebook's,
+which is only known after reading it, so that one read infers.
 
 **Object-store-safe commits.**  The generation-manifest protocol and
 its toolkit live in `storage/manifest.py` (shared with the search and
-dedup indexes and the snapshot store, and unit-tested there):
-generation and tombstone directory names, the delete log and its
-anti-join, the append id guard, the commit gate and GC.  Compaction
-writes a brand-new generation directory, commits with ONE
+dedup indexes and the snapshot store, and unit-tested there).
+Compaction writes a brand-new generation directory, commits with ONE
 ``_commits`` row append, and readers resolve max-seq — never a rename
 on the read path, so a crash at any point leaves readers on a complete
 generation, on local disk and object stores alike.  Single writer per
 index version assumed.
 
 Scale shape: the build is the fused form's first half (one broadcast
-centroid scoring pass + one partitionBy write — the shuffle is the
-partitioned write itself, exactly the shuffle an inverted layout is FOR,
-laid out as ``files_per_cell`` files per cell directory so file count
-tracks the knob, not the task count).  A probe reads the centroid table
-(KBs), prunes the inverted file to ``n_probe x |queries|`` cell
-directories on DISK (PartitionFilters for the static form,
-DynamicPruningExpression for the DPP form — never a post-scan filter),
-and re-ranks only those rows — corpus scan cost is 1/n_centroids per
-probed cell regardless of corpus size.
+centroid scoring pass + one partitionBy write laid out as
+``files_per_cell`` files per cell directory).  Every verb resolves
+manifest state ONCE and loads the tombstone log ONCE per call; append's
+two id guards run as ONE Spark job.
 
-Constant-factor discipline (round-12): every verb resolves manifest
-state ONCE per call and loads the tombstone log ONCE per call (the
-resolved frame threads through every anti-join in that verb), append's
-two id guards run as ONE Spark job, and partitioned writes repartition
-by the directory column first so a 32-task write does not scatter 32
-small files into every directory.
-
-Float discipline: embeddings persist as the original ARRAY<FLOAT> (bit
-round-trip through parquet), so probe-side cosines see the exact same
-doubles as the fused form; the codebook persists at DECIMAL(9,6) (exact
+Float discipline: embeddings persist as ARRAY<FLOAT> (bit round-trip
+through parquet), so probe-side cosines see the exact same doubles as
+the fused form; the codebook persists at DECIMAL(9,6) (exact
 round-trip), so ADC distances are the same e12 integers.
 """
 
@@ -102,6 +88,7 @@ from ..storage.manifest import (
     local_rows_df as _local_rows,
     manifest_state as _state,
     max_files_per_leaf_dir as _max_files,
+    read_component as _read_component,
     repartition_for_layout as _layout,
     reset_version_dir as _reset_version_dir,
     run_concurrent as _run_concurrent,
@@ -112,7 +99,42 @@ from .clustering import _quantize as _pq_quantize
 from .similarity import _pq_encode_df, _pq_seed_codebook
 
 
-def _assign_cells(scored: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+# generation-addressed components (storage/manifest.gen_dir)
+_COMPONENTS = ("cells", "codes")
+
+# fixed component schemas, read pinned (no footer-inference job)
+_CENTROIDS_DDL = "centroid_id long, cv array<float>"
+_CELLS_DDL = "vec_id long, embedding array<float>, cell int"
+_CODEBOOK_DDL = "sub int, code int, vals array<decimal(9,6)>"
+
+
+def _centroids(spark: SparkSession, base: str) -> DataFrame:
+    return _read_component(spark, f"{base}/centroids", _CENTROIDS_DDL)
+
+
+def _cells(spark: SparkSession, base: str, gen: int) -> DataFrame:
+    return _read_component(spark, _gen_dir(base, "cells", gen), _CELLS_DDL)
+
+
+def _codebook(spark: SparkSession, base: str) -> DataFrame:
+    return _read_component(spark, f"{base}/codebook", _CODEBOOK_DDL)
+
+
+def _codes(spark: SparkSession, base: str, gen: int) -> DataFrame:
+    # the one inferred read: codes carry m code columns and m is the
+    # codebook's, which only a job over the codebook reveals — no
+    # cheaper than the one-task footer-inference job it would replace
+    return spark.read.parquet(_gen_dir(base, "codes", gen))
+
+
+def _vectors(df: DataFrame) -> DataFrame:
+    """The store's two input columns at their persisted types."""
+    return df.select(
+        F.col("vec_id").cast("long"), F.col("embedding").cast("array<float>")
+    )
+
+
+def _assign_cells(scored: DataFrame) -> DataFrame:
     """Winner centroid per vector from the scored cross product —
     highest ccos, lowest centroid_id on ties (the exact
     similarity.ivf_topk assignment rule) — as a MAP-SIDE-COMBINABLE
@@ -121,11 +143,11 @@ def _assign_cells(scored: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     assignment pass combines n_centroids-to-1 on the map side; the
     window form shuffles and sorts every scored row)."""
     return (
-        scored.groupBy(id_col)
+        scored.groupBy("vec_id")
         .agg(
             F.max_by(
                 F.struct(
-                    F.col(vec_col).alias("v"),
+                    F.col("embedding").alias("v"),
                     F.col("centroid_id").alias("c"),
                 ),
                 F.struct(
@@ -135,18 +157,25 @@ def _assign_cells(scored: DataFrame, id_col: str, vec_col: str) -> DataFrame:
             ).alias("_w")
         )
         .select(
-            id_col,
-            F.col("_w.v").alias(vec_col),
+            "vec_id",
+            F.col("_w.v").alias("embedding"),
             F.col("_w.c").cast("int").alias("cell"),
         )
     )
 
 
-# generation-addressed components (storage/manifest.gen_dir)
-_COMPONENTS = ("cells", "codes")
+def _score_centroids(vecs: DataFrame, cents: DataFrame) -> DataFrame:
+    """Every (vector, centroid) pair with its 6-decimal cosine — the
+    input of `_assign_cells`; ``cents`` is tiny and broadcast."""
+    return vecs.crossJoin(F.broadcast(cents)).select(
+        "vec_id",
+        "embedding",
+        "centroid_id",
+        F.round(cosine(F.col("embedding"), F.col("cv")), 6).alias("ccos"),
+    )
 
 
-def _quantize_keep_cell(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+def _quantize_keep_cell(df: DataFrame) -> DataFrame:
     """`clustering._quantize` with the ``cell`` column riding along, so
     the PQ encode's output can be written straight into the
     cell-partitioned codes layout (one pass, no re-join against the
@@ -155,9 +184,9 @@ def _quantize_keep_cell(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     from .clustering import QUANT
 
     return df.select(
-        F.col(id_col),
+        "vec_id",
         F.col("cell").cast("int").alias("cell"),
-        F.transform(F.col(vec_col), lambda v: v.cast(QUANT)).alias("xd"),
+        F.transform(F.col("embedding"), lambda v: v.cast(QUANT)).alias("xd"),
     )
 
 
@@ -188,11 +217,10 @@ def ann_index_build(
     m: int = 4,
     k_codes: int = 16,
     version: str = "v1",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     files_per_cell: int = 1,
 ) -> DataFrame:
-    """Build and persist the ANN index; returns the per-cell manifest
+    """Build and persist the ANN index over ``emb``'s ``vec_id`` /
+    ``embedding`` columns; returns the per-cell manifest
     ``(cell, n_vectors, min_vec_id, max_vec_id)`` read back from the
     persisted inverted file (so the gate proves what is ON DISK, not
     what was computed in flight).  ``files_per_cell`` controls the
@@ -204,7 +232,7 @@ def ann_index_build(
     spark = emb.sparkSession
     base = _base(index_dir, version)
     _reset_version_dir(spark, base)
-    emb = fan_out(emb)
+    emb = _vectors(fan_out(emb))
 
     # -- IVF half: centroids + cell assignment (same derivation, same
     #    rounding, same tie-break as similarity.ivf_topk) --------------
@@ -218,19 +246,13 @@ def ann_index_build(
     # Values are identical to the old write-then-read-back form:
     # ARRAY<FLOAT> round-trips parquet bit-exact.
     cents = (
-        emb.filter(F.col(id_col) < n_centroids)
+        emb.filter(F.col("vec_id") < n_centroids)
         .select(
-            F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cv")
+            F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cv")
         )
         .localCheckpoint(eager=True)
     )
-    scored = emb.crossJoin(F.broadcast(cents)).select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.col("centroid_id"),
-        F.round(cosine(F.col(vec_col), F.col("cv")), 6).alias("ccos"),
-    )
-    assigned = _assign_cells(scored, id_col, vec_col)
+    assigned = _assign_cells(_score_centroids(emb, cents))
     # the partitionBy write IS the inverted layout: one directory per
     # cell, so probes prune on disk; the layout repartition keeps it at
     # files_per_cell files per directory instead of one per write task.
@@ -240,7 +262,7 @@ def ann_index_build(
         lambda: cents.coalesce(1)
         .write.mode("overwrite")
         .parquet(f"{base}/centroids"),
-        lambda: _layout(assigned, ["cell"], files_per_cell, id_col)
+        lambda: _layout(assigned, ["cell"], files_per_cell, "vec_id")
         .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(f"{base}/cells"),
@@ -253,10 +275,8 @@ def ann_index_build(
     # aggregation, and the cell column rides along so the codes land
     # in the same cell-partitioned layout the vectors use — IVF-PQ
     # probes then prune code I/O on disk too
-    quant = _quantize_keep_cell(
-        spark.read.parquet(f"{base}/cells"), id_col, vec_col
-    )
-    codebook = _pq_seed_codebook(quant, id_col, m, k_codes)
+    quant = _quantize_keep_cell(_cells(spark, base, 0))
+    codebook = _pq_seed_codebook(quant, "vec_id", m, k_codes)
     dsub = len(codebook[0][0])
     cb_rows = [
         (s, c, codebook[s][c])
@@ -267,9 +287,7 @@ def ann_index_build(
     # table — the (tiny) codebook write and the codes write are
     # independent and overlap
     _run_concurrent(
-        lambda: _local_rows(
-            spark, "sub int, code int, vals array<decimal(9,6)>", cb_rows
-        )
+        lambda: _local_rows(spark, _CODEBOOK_DDL, cb_rows)
         .coalesce(1)
         .write.mode("overwrite")
         .parquet(f"{base}/codebook"),
@@ -277,7 +295,7 @@ def ann_index_build(
             _pq_encode_df(quant, codebook, dsub),
             ["cell"],
             files_per_cell,
-            id_col,
+            "vec_id",
         )
         .write.mode("overwrite")
         .partitionBy("cell")
@@ -285,12 +303,12 @@ def ann_index_build(
     )
 
     return (
-        spark.read.parquet(f"{base}/cells")
-        .groupBy(F.col("cell").cast("int").alias("cell"))
+        _cells(spark, base, 0)
+        .groupBy("cell")
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),
-            F.min(id_col).alias("min_vec_id"),
-            F.max(id_col).alias("max_vec_id"),
+            F.min("vec_id").alias("min_vec_id"),
+            F.max("vec_id").alias("max_vec_id"),
         )
     )
 
@@ -303,8 +321,6 @@ def ann_index_append(
     new_vecs: DataFrame,
     index_dir: str,
     version: str = "v1",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     assert_unique: bool = True,
 ) -> DataFrame:
     """Incremental index maintenance — the third production verb after
@@ -340,22 +356,14 @@ def ann_index_append(
     gen, tomb_gen, _ = _state(spark, base)
     cells_dir = _gen_dir(base, "cells", gen)
     codes_dir = _gen_dir(base, "codes", gen)
-    cents = spark.read.parquet(f"{base}/centroids")
+    new_vecs = _vectors(new_vecs)
 
-    new_ids = new_vecs.select(F.col(id_col).alias("vec_id")).distinct()
+    new_ids = new_vecs.select("vec_id").distinct()
     tombs = _load_tombstones(spark, base, tomb_gen, "vec_id")
     live_ids = (
-        spark.read.parquet(cells_dir).select(F.col(id_col).alias("vec_id"))
-        if assert_unique
-        else None
+        _cells(spark, base, gen).select("vec_id") if assert_unique else None
     )
-
-    scored = new_vecs.select(id_col, vec_col).crossJoin(F.broadcast(cents)).select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.col("centroid_id"),
-        F.round(cosine(F.col(vec_col), F.col("cv")), 6).alias("ccos"),
-    )
+    scored = _score_centroids(new_vecs, _centroids(spark, base))
     # materialize the batch assignment once (batch-sized, eager executor-
     # local checkpoint): it is written to the inverted file, PQ-encoded
     # for the codes append, AND aggregated into the returned receipt —
@@ -367,9 +375,7 @@ def ann_index_append(
     # passes, so nothing is ever written for a rejected batch.
     hits, assigned = _run_concurrent(
         lambda: _id_guard(new_ids, tombs, live_ids, "vec_id"),
-        lambda: _assign_cells(scored, id_col, vec_col).localCheckpoint(
-            eager=True
-        ),
+        lambda: _assign_cells(scored).localCheckpoint(eager=True),
     )
     if hits.get("dead"):
         raise ValueError(
@@ -384,11 +390,11 @@ def ann_index_append(
             f"candidates; pass assert_unique=False only with an external "
             f"uniqueness guarantee"
         )
-    _layout(assigned, ["cell"], 1, id_col).write.mode("append").partitionBy(
+    _layout(assigned, ["cell"], 1, "vec_id").write.mode("append").partitionBy(
         "cell"
     ).parquet(cells_dir)
 
-    cb_rows = spark.read.parquet(f"{base}/codebook").collect()
+    cb_rows = _codebook(spark, base).collect()
     m = 1 + max(r["sub"] for r in cb_rows)
     k_codes = 1 + max(r["code"] for r in cb_rows)
     codebook = [[None] * k_codes for _ in range(m)]
@@ -398,9 +404,9 @@ def ann_index_append(
     # encode from the (checkpointed) ASSIGNED frame so the cell rides
     # along into the cell-partitioned codes layout with no re-join
     # against the assignment
-    quant = _quantize_keep_cell(assigned, id_col, vec_col)
+    quant = _quantize_keep_cell(assigned)
     _layout(
-        _pq_encode_df(quant, codebook, dsub), ["cell"], 1, id_col
+        _pq_encode_df(quant, codebook, dsub), ["cell"], 1, "vec_id"
     ).write.mode("append").partitionBy("cell").parquet(codes_dir)
 
     return assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("n_appended"))
@@ -473,12 +479,8 @@ def ann_index_compact(
     new_gen = gen + 1
     tombs = _load_tombstones(spark, base, tomb_gen, "vec_id")
 
-    cells = _anti_tombstones(
-        spark.read.parquet(_gen_dir(base, "cells", gen)), tombs, "vec_id"
-    )
-    codes = _anti_tombstones(
-        spark.read.parquet(_gen_dir(base, "codes", gen)), tombs, "vec_id"
-    )
+    cells = _anti_tombstones(_cells(spark, base, gen), tombs, "vec_id")
+    codes = _anti_tombstones(_codes(spark, base, gen), tombs, "vec_id")
     # the two rewrites are independent and land in the UNCOMMITTED new
     # generation (the manifest append below is the atomic flip, so
     # their relative order is crash-irrelevant) — submit them on
@@ -504,8 +506,8 @@ def ann_index_compact(
     )
 
     return (
-        spark.read.parquet(_gen_dir(base, "cells", new_gen))
-        .groupBy(F.col("cell").cast("int").alias("cell"))
+        _cells(spark, base, new_gen)
+        .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n_vectors"))
     )
 
@@ -522,9 +524,7 @@ def ann_index_stats(
     columns + one broadcast tombstone join; never touches vectors."""
     base = _base(index_dir, version)
     gen, tomb_gen, _ = _state(spark, base)
-    cells = spark.read.parquet(_gen_dir(base, "cells", gen)).select(
-        "vec_id", F.col("cell").cast("int").alias("cell")
-    )
+    cells = _cells(spark, base, gen).select("vec_id", "cell")
     t = _load_tombstones(spark, base, tomb_gen, "vec_id")
     if t is None:
         dead = F.lit(0)
@@ -602,7 +602,7 @@ def ann_index_maintain(
     base = _base(index_dir, version)
     gen, tomb_gen, _ = _state(spark, base)
     cells_dir = _gen_dir(base, "cells", gen)
-    n_rows = spark.read.parquet(cells_dir).count()
+    n_rows = _cells(spark, base, gen).count()
     tombs = _load_tombstones(spark, base, tomb_gen, "vec_id")
     n_dead = _count_tombstones(tombs)
     dead_ratio = n_dead / max(n_rows, 1)
@@ -635,31 +635,19 @@ def ann_index_maintain(
 
 
 # ---------------------------------------------------------------------------
-# Probe (static pruning)
+# Probe
 # ---------------------------------------------------------------------------
-def ann_index_probe(
-    spark: SparkSession,
-    index_dir: str,
-    query_ids: list[int],
-    k: int = 5,
-    n_probe: int = 4,
-    version: str = "v1",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF probe off the persisted index — NO rebuild: centroids and the
-    inverted file are read as-is; only ``n_probe`` cell directories per
-    query are scanned (static partition pruning via the collected probe
-    cell list).  Result is byte-identical to ``similarity.ivf_topk`` on
-    the same corpus/params."""
-    base = _base(index_dir, version)
-    gen, tomb_gen, _ = _state(spark, base)
-    cells = spark.read.parquet(_gen_dir(base, "cells", gen))
-    qdf = cells.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    return _probe_vectors_static(
-        spark, base, gen, tomb_gen, qdf, k, n_probe, id_col, vec_col
+def _query_frame(cells: DataFrame, queries: list[int] | DataFrame) -> DataFrame:
+    """(query_id, qv) for either query shape: a caller frame's first
+    two columns as given, or a list of member ids looked up in the
+    inverted file itself."""
+    if isinstance(queries, DataFrame):
+        return queries.select(
+            F.col(queries.columns[0]).alias("query_id"),
+            F.col(queries.columns[1]).alias("qv"),
+        )
+    return cells.filter(F.col("vec_id").isin(list(queries))).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
 
 
@@ -685,6 +673,29 @@ def _probe_cells_df(
     )
 
 
+def _routed(
+    spark: SparkSession,
+    index_dir: str,
+    version: str,
+    queries: list[int] | DataFrame,
+    n_probe: int,
+) -> tuple[str, int, DataFrame, DataFrame, DataFrame]:
+    """The routing half shared by the two IVF verbs: manifest state
+    resolved once, the query frame, its probe cells, and the live
+    (tombstone-filtered) inverted file.  Returns (base, gen, qdf,
+    probes, live); the caller joins ``live`` to the BROADCAST probes on
+    ``cell``, which is what lets Spark prune the scan dynamically."""
+    base = _base(index_dir, version)
+    gen, tomb_gen, _ = _state(spark, base)
+    cells = _cells(spark, base, gen)
+    qdf = _query_frame(cells, queries)
+    probes = _probe_cells_df(qdf, _centroids(spark, base), n_probe)
+    live = _anti_tombstones(
+        cells, _load_tombstones(spark, base, tomb_gen, "vec_id"), "vec_id"
+    )
+    return base, gen, qdf, probes, live
+
+
 def _rerank_topk(cand: DataFrame, k: int) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
@@ -694,328 +705,147 @@ def _rerank_topk(cand: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _probe_vectors_static(
+def ann_index_probe(
     spark: SparkSession,
-    base: str,
-    gen: int,
-    tomb_gen: int,
-    qdf: DataFrame,
-    k: int,
-    n_probe: int,
-    id_col: str,
-    vec_col: str,
+    index_dir: str,
+    queries: list[int] | DataFrame,
+    k: int = 5,
+    n_probe: int = 4,
+    allowed: DataFrame | None = None,
+    version: str = "v1",
 ) -> DataFrame:
-    """Shared static-pruning probe body: manifest state is resolved by
-    the CALLER (exactly once per verb), so the member-id wrapper does
-    not pay a second resolution on top of the vector form's."""
-    cents = spark.read.parquet(f"{base}/centroids")
-    cells = spark.read.parquet(_gen_dir(base, "cells", gen))
-    probes = _probe_cells_df(qdf, cents, n_probe)
-    # cell-list routing metadata (≤ |queries| x n_probe values):
-    # collected so the inverted-file read prunes partitions STATICALLY
-    # (PartitionFilters in the scan, not a post-hoc filter) — the
-    # query-router pattern.  Only the cell ids transit the driver; the
-    # probe frame itself stays JVM-side and is broadcast as-is (a
-    # re-parallelized driver copy would route every later action
-    # through Python workers).
-    probe_cells = sorted(
-        int(r["cell"]) for r in probes.select("cell").distinct().collect()
-    )
-    tombs = _load_tombstones(spark, base, tomb_gen, "vec_id")
-    pruned = _anti_tombstones(
-        cells.filter(F.col("cell").isin(probe_cells)),
-        tombs, id_col,
-    )
-    cand = (
-        pruned
-        .join(F.broadcast(probes), "cell")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(cosine(F.col("qv"), F.col(vec_col)), 4).alias("cos"),
+    """IVF probe off the persisted index — NO rebuild: centroids score
+    the queries, the inverted file is scanned only in each query's
+    ``n_probe`` nearest cell directories, and the survivors are
+    re-ranked by exact cosine.  ``queries`` is a list of member ids or
+    a caller (query_id, qv) frame of fresh embeddings that never lived
+    in the index; a query whose id matches a corpus vector is
+    self-excluded, so member probes are byte-identical to the fused
+    ``similarity.ivf_topk`` and member vectors passed as a frame give
+    the member-id rows.
+
+    ``allowed`` — a one-column frame of ids passing a metadata
+    predicate — turns it into the filtered probe ("top-k among
+    documents WHERE <predicate>", the common production retrieval
+    shape): candidates of the probed cells semi-join it BEFORE the
+    re-rank (IVF post-filtering: cells are chosen by geometry alone, so
+    recall under very selective predicates is recovered by raising
+    n_probe — the FAISS IDSelector trade).  Tombstoned ids never
+    appear, allowed or not.
+
+    Scale shape: the inverted-file scan is pruned by dynamic partition
+    pruning — the probe-cell set stays a DataFrame, and its broadcast
+    feeds a DynamicPruningExpression on the ``cell`` partition column —
+    so the scan opens only the probed cell directories and no routing
+    data transits the driver."""
+    _, _, _, probes, live = _routed(spark, index_dir, version, queries, n_probe)
+    if allowed is not None:
+        live = live.join(
+            allowed.select(
+                F.col(allowed.columns[0]).cast("long").alias("vec_id")
+            ).distinct(),
+            "vec_id",
+            "semi",
         )
-    )
-    return _rerank_topk(cand, k)
-
-
-def ann_index_probe_vectors(
-    spark: SparkSession,
-    index_dir: str,
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 4,
-    version: str = "v1",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Probe with CALLER-SUPPLIED query vectors — ``queries`` is
-    (query_id, qv) — the serving-path form: query vectors arrive from
-    outside (a request stream, a batch of fresh embeddings) and never
-    need to live in the index.  `ann_index_probe` is the corpus-member
-    convenience wrapper.  A query whose id matches a corpus vector is
-    self-excluded, so member probes stay byte-identical to the fused
-    form.  For very large offline query batches where the
-    |Q| x n_probe routing collect should not transit the driver, use
-    `ann_index_probe_vectors_dpp`."""
-    base = _base(index_dir, version)
-    gen, tomb_gen, _ = _state(spark, base)
-    qdf = queries.select(F.col(queries.columns[0]).alias("query_id"),
-                         F.col(queries.columns[1]).alias("qv"))
-    return _probe_vectors_static(
-        spark, base, gen, tomb_gen, qdf, k, n_probe, id_col, vec_col
-    )
-
-
-def ann_index_probe_vectors_filtered(
-    spark: SparkSession,
-    index_dir: str,
-    queries: DataFrame,
-    allowed: DataFrame,
-    k: int = 5,
-    n_probe: int = 4,
-    version: str = "v1",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Filtered ANN probe with CALLER-SUPPLIED query vectors — the
-    serving form of `ann_index_probe_filtered` (metadata predicate +
-    vector search for fresh query embeddings that never lived in the
-    index).  ``queries`` is (query_id, qv); semantics, rounding and
-    tie-breaks match the member-id form exactly (pinned by test:
-    member vectors passed externally give byte-identical results)."""
-    base = _base(index_dir, version)
-    gen, tomb_gen, _ = _state(spark, base)
-    qdf = queries.select(F.col(queries.columns[0]).alias("query_id"),
-                         F.col(queries.columns[1]).alias("qv"))
-    return _probe_filtered_impl(
-        spark, base, gen, tomb_gen, qdf, allowed, k, n_probe, id_col, vec_col
-    )
-
-
-def ann_index_probe_filtered(
-    spark: SparkSession,
-    index_dir: str,
-    query_ids: list[int],
-    allowed: DataFrame,
-    k: int = 5,
-    n_probe: int = 4,
-    version: str = "v1",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Filtered ANN probe — metadata predicate + vector search ("top-k
-    among documents WHERE <predicate>"), the most common production
-    retrieval shape.  `allowed` is a one-column (vec_id) DataFrame of
-    ids passing the metadata predicate; candidates from the probed
-    cells semi-join it BEFORE the cosine re-rank (post-filtering, the
-    standard IVF approach: cells are probed by vector geometry alone,
-    then the predicate prunes candidates — recall under very selective
-    predicates is recovered by raising n_probe, exactly the FAISS
-    IDSelector trade).  Same rounding/tie-break as the unfiltered
-    probe, so results equal the unfiltered probe's rows restricted and
-    re-ranked within the allowed set.
-
-    Scale shape: the semi-join key set is predicate-sized; for
-    selective predicates it broadcasts, otherwise it is a shuffle join
-    on the already cell-pruned candidate slice (n_probe/|cells| of the
-    corpus), never the full index."""
-    base = _base(index_dir, version)
-    gen, tomb_gen, _ = _state(spark, base)
-    cells = spark.read.parquet(_gen_dir(base, "cells", gen))
-    qdf = cells.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    return _probe_filtered_impl(
-        spark, base, gen, tomb_gen, qdf, allowed, k, n_probe, id_col, vec_col
-    )
-
-
-def _probe_filtered_impl(
-    spark: SparkSession,
-    base: str,
-    gen: int,
-    tomb_gen: int,
-    qdf: DataFrame,
-    allowed: DataFrame,
-    k: int,
-    n_probe: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    cents = spark.read.parquet(f"{base}/centroids")
-    cells = spark.read.parquet(_gen_dir(base, "cells", gen))
-    probes = _probe_cells_df(qdf, cents, n_probe)
-    probe_cells = sorted(
-        int(r["cell"]) for r in probes.select("cell").distinct().collect()
-    )
-    tombs = _load_tombstones(spark, base, tomb_gen, "vec_id")
-    pruned = _anti_tombstones(
-        cells.filter(F.col("cell").isin(probe_cells)),
-        tombs, id_col,
-    )
-    allowed_ids = allowed.select(
-        F.col(allowed.columns[0]).cast("long").alias(id_col)
-    ).distinct()
-    cand = (
-        pruned.join(allowed_ids, id_col, "semi")
-        .join(F.broadcast(probes), "cell")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(cosine(F.col("qv"), F.col(vec_col)), 4).alias("cos"),
-        )
-    )
-    return _rerank_topk(cand, k)
-
-
-# ---------------------------------------------------------------------------
-# Probe (dynamic partition pruning)
-# ---------------------------------------------------------------------------
-def _probe_dpp_impl(
-    spark: SparkSession,
-    base: str,
-    gen: int,
-    tomb_gen: int,
-    qdf: DataFrame,
-    k: int,
-    n_probe: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Shared DPP probe body: the probe-cell set stays a DataFrame
-    end-to-end; the broadcast join against the cell-partitioned
-    inverted file lets Spark insert a DynamicPruningExpression on the
-    ``cell`` partition column (fed by the reused broadcast of the
-    probe side), so the scan touches only the probed cell directories
-    with ZERO driver-side routing (no collect anywhere in the plan)."""
-    cents = spark.read.parquet(f"{base}/centroids")
-    cells = spark.read.parquet(_gen_dir(base, "cells", gen))
-    probes = _probe_cells_df(qdf, cents, n_probe)
-    tombs = _load_tombstones(spark, base, tomb_gen, "vec_id")
-    live = _anti_tombstones(cells, tombs, id_col)
     cand = (
         live.join(F.broadcast(probes), "cell")
-        .filter(F.col(id_col) != F.col("query_id"))
+        .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(cosine(F.col("qv"), F.col(vec_col)), 4).alias("cos"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.round(cosine(F.col("qv"), F.col("embedding")), 4).alias("cos"),
         )
     )
     return _rerank_topk(cand, k)
 
 
-def ann_index_probe_dpp(
+def ann_index_probe_ivfpq(
     spark: SparkSession,
     index_dir: str,
-    query_ids: list[int],
-    k: int = 5,
+    queries: list[int] | DataFrame,
+    topk: int = 5,
     n_probe: int = 4,
     version: str = "v1",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF probe with the probe-cell set kept as a DATAFRAME end-to-end
-    (DynamicPruningExpression on the ``cell`` partition column instead
-    of a driver-collected cell list).  Byte-identical to
-    `ann_index_probe` (pinned by test + sweep); the variant for very
-    large offline query batches where even |Q| x n_probe routing rows
-    should not transit the driver.  Member-id form; for caller-supplied
-    query vectors use `ann_index_probe_vectors_dpp`."""
-    base = _base(index_dir, version)
-    gen, tomb_gen, _ = _state(spark, base)
-    cells = spark.read.parquet(_gen_dir(base, "cells", gen))
-    qdf = cells.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+    """IVF-PQ probe — the FAISS production serving shape: the IVF half
+    bounds WHICH vectors are scored (live members of each query's
+    ``n_probe`` nearest cells) and PQ asymmetric distance bounds HOW
+    MUCH each costs (m code lookups off the persisted codes, no
+    re-encode).  ``queries`` follows `ann_index_probe`.  The codes
+    share the inverted cell-partitioned layout, so BOTH scans prune on
+    disk through a DynamicPruningExpression fed from the broadcast
+    probe side.  Byte-identical to the fused ``similarity.ivf_pq_topk``:
+    same decimal-quantized arithmetic, same e12 BIGINT distances, same
+    tie-breaks."""
+    base, gen, qdf, probes, live = _routed(
+        spark, index_dir, version, queries, n_probe
     )
-    return _probe_dpp_impl(
-        spark, base, gen, tomb_gen, qdf, k, n_probe, id_col, vec_col
+    cand = (
+        live.select("vec_id", "cell")
+        .join(F.broadcast(probes.select("query_id", "cell")), "cell")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id")
     )
-
-
-def ann_index_probe_vectors_dpp(
-    spark: SparkSession,
-    index_dir: str,
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 4,
-    version: str = "v1",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """DPP probe with CALLER-SUPPLIED query vectors — the true serving
-    case (fresh query embeddings that never lived in the index) with
-    ZERO driver-side routing: ``queries`` is (query_id, qv) and stays
-    distributed end-to-end; the inverted-file scan is pruned by a
-    DynamicPruningExpression fed by the broadcast probe side, exactly
-    as the member-id DPP form.  Byte-identical to
-    `ann_index_probe_vectors` on the same queries (pinned by
-    tests/test_ann_index.py, which also asserts the
-    DynamicPruningExpression and the absence of collects)."""
-    base = _base(index_dir, version)
-    gen, tomb_gen, _ = _state(spark, base)
-    qdf = queries.select(F.col(queries.columns[0]).alias("query_id"),
-                         F.col(queries.columns[1]).alias("qv"))
-    return _probe_dpp_impl(
-        spark, base, gen, tomb_gen, qdf, k, n_probe, id_col, vec_col
+    codes = _codes(spark, base, gen).join(
+        F.broadcast(probes.select("cell").distinct()), "cell", "semi"
     )
+    return _adc_topk(spark, base, qdf, codes, topk, cand)
 
 
-# ---------------------------------------------------------------------------
-# Probe (PQ / ADC)
-# ---------------------------------------------------------------------------
 def ann_index_probe_pq(
     spark: SparkSession,
     index_dir: str,
-    query_ids: list[int],
+    queries: list[int] | DataFrame,
     topk: int = 5,
     version: str = "v1",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """ADC probe off the persisted PQ codes + codebook — no re-encode.
-    The per-query distance table is ONE Spark expression: quantized
-    query subvectors x the broadcast codebook, exact decimal(30,12)
-    zip_with/aggregate arithmetic over the round-tripped DECIMAL(9,6)
-    entries — the same e12 BIGINTs as the fused
-    ``similarity.pq_adc_topk`` (and as the driver-side Decimal loop
-    this replaced; prec-50 vs 30,12 agree because every product is
-    exactly scale-12).  Driver work is O(1): no |Q|-proportional
-    Python loop, no collect of query vectors.  The codes table is
-    cell-partitioned (round-13 layout), but this probe scans ALL of it
-    on purpose — exhaustive ADC over the corpus IS its semantics (the
-    brute-force twin); the cell-pruned form is `ann_index_probe_ivfpq`
-    and friends."""
+    """ADC probe off the persisted PQ codes + codebook — no re-encode;
+    byte-identical to the fused ``similarity.pq_adc_topk``.  It scans
+    ALL live codes on purpose: exhaustive ADC over the corpus IS its
+    semantics (the brute-force twin of `ann_index_probe_ivfpq`).
+    ``queries`` follows `ann_index_probe`."""
     base = _base(index_dir, version)
     gen, tomb_gen, _ = _state(spark, base)
-    cells = spark.read.parquet(_gen_dir(base, "cells", gen))
-    tombs = _load_tombstones(spark, base, tomb_gen, "vec_id")
     codes = _anti_tombstones(
-        spark.read.parquet(_gen_dir(base, "codes", gen)), tombs, id_col
+        _codes(spark, base, gen),
+        _load_tombstones(spark, base, tomb_gen, "vec_id"),
+        "vec_id",
     )
+    qdf = _query_frame(_cells(spark, base, gen), queries)
+    return _adc_topk(spark, base, qdf, codes, topk)
+
+
+def _adc_topk(
+    spark: SparkSession,
+    base: str,
+    qdf: DataFrame,
+    codes: DataFrame,
+    topk: int,
+    cand: DataFrame | None = None,
+) -> DataFrame:
+    """The ADC ranking of both PQ verbs: the per-query distance table
+    joined to the exploded codes, summed per neighbour, ranked by
+    (adc_e12, neighbor_id).  ``cand`` holds the (query_id, vec_id)
+    pairs the IVF-PQ probe routed; without it every code row is scored
+    against every query (self excluded)."""
     m = sum(1 for c in codes.columns if c.startswith("code"))
-
-    qquant = _pq_quantize(
-        cells.filter(F.col(id_col).isin(query_ids)), id_col, vec_col
-    )
-    # distance table as data: |Q| x m x k_codes rows, built by a
-    # broadcast nested-loop of the (tiny) codebook against the (tiny)
-    # quantized query set — all exact decimal, all JVM-side
-    dtable = _adc_dtable(spark, base, qquant, id_col)
-
+    dtable = _adc_dtable(spark, base, _pq_quantize(qdf, "query_id", "qv"))
     encoded = codes.select(
-        id_col,
+        "vec_id",
         F.posexplode(F.array(*[F.col(f"code{s}") for s in range(m)])).alias(
             "sub", "code"
         ),
     )
-    adc = (
-        encoded.join(F.broadcast(dtable), ["sub", "code"])
-        .filter(F.col(id_col) != F.col("query_id"))
-        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
-        .agg(F.sum("d_e12").alias("adc_e12"))
+    if cand is None:
+        scored = encoded.join(F.broadcast(dtable), ["sub", "code"]).filter(
+            F.col("vec_id") != F.col("query_id")
+        )
+    else:
+        scored = cand.join(encoded, "vec_id").join(
+            F.broadcast(dtable), ["query_id", "sub", "code"]
+        )
+    adc = scored.groupBy("query_id", F.col("vec_id").alias("neighbor_id")).agg(
+        F.sum("d_e12").alias("adc_e12")
     )
     w = Window.partitionBy("query_id").orderBy("adc_e12", "neighbor_id")
     return (
@@ -1026,17 +856,16 @@ def ann_index_probe_pq(
 
 
 def _adc_dtable(
-    spark: SparkSession, base: str, queries_quant: DataFrame, id_col: str
+    spark: SparkSession, base: str, queries_quant: DataFrame
 ) -> DataFrame:
     """Per-query ADC distance table as ONE Spark expression over the
     broadcast codebook: |Q| x m x k_codes rows of exact decimal(30,12)
-    zip_with/aggregate arithmetic, the same e12 BIGINTs as the fused
-    forms.  Driver work is O(1)."""
-    cb = spark.read.parquet(f"{base}/codebook")
+    zip_with/aggregate arithmetic (every product is exactly scale-12),
+    the same e12 BIGINTs as the fused forms.  Driver work is O(1)."""
     return (
-        queries_quant.crossJoin(F.broadcast(cb))
+        queries_quant.crossJoin(F.broadcast(_codebook(spark, base)))
         .select(
-            F.col(id_col).alias("query_id"),
+            "query_id",
             "sub",
             "code",
             F.expr(
@@ -1048,218 +877,4 @@ def _adc_dtable(
                 ") * 1000000000000 AS BIGINT)"
             ).alias("d_e12"),
         )
-    )
-
-
-def _probe_ivfpq_impl(
-    spark: SparkSession,
-    base: str,
-    gen: int,
-    tomb_gen: int,
-    qdf: DataFrame,
-    topk: int,
-    n_probe: int,
-    id_col: str,
-    vec_col: str,
-    dpp: bool,
-) -> DataFrame:
-    """Shared IVF-PQ probe body — the FAISS production serving shape:
-    the IVF half bounds WHICH vectors are scored (live members of each
-    query's ``n_probe`` nearest cells) and PQ asymmetric distance
-    bounds HOW MUCH each costs (m code lookups off the persisted
-    codes, no re-encode).  Because the codes share the inverted
-    cell-partitioned layout (round-13), BOTH scans prune on disk:
-    with ``dpp=False`` the collected probe-cell list lands as
-    PartitionFilters on the cells AND codes scans; with ``dpp=True``
-    the probe-cell set stays a DataFrame end-to-end and both scans are
-    pruned by a DynamicPruningExpression fed from the broadcast probe
-    side — zero driver-side routing, the serving path for external
-    query batches.  Byte-identical across all four public forms and to
-    the fused ``similarity.ivf_pq_topk`` (pinned by test): same
-    decimal-quantized arithmetic, same e12 BIGINT distances, same
-    tie-breaks."""
-    cents = spark.read.parquet(f"{base}/centroids")
-    cells = spark.read.parquet(_gen_dir(base, "cells", gen))
-    codes = spark.read.parquet(_gen_dir(base, "codes", gen))
-    probes = _probe_cells_df(qdf, cents, n_probe)
-    tombs = _load_tombstones(spark, base, tomb_gen, "vec_id")
-    if dpp:
-        # both scans prune via DynamicPruningExpression: the cells scan
-        # from the inner broadcast join below, the codes scan from this
-        # broadcast semi-join on its partition column
-        cells_slice = cells
-        codes_slice = codes.join(
-            F.broadcast(probes.select("cell").distinct()), "cell", "semi"
-        )
-    else:
-        # cell-list routing metadata (≤ |queries| x n_probe values)
-        # collected so BOTH partitioned scans prune statically
-        probe_cells = sorted(
-            int(r["cell"]) for r in probes.select("cell").distinct().collect()
-        )
-        cells_slice = cells.filter(F.col("cell").isin(probe_cells))
-        codes_slice = codes.filter(F.col("cell").isin(probe_cells))
-    cand = (
-        _anti_tombstones(cells_slice.select(id_col, "cell"), tombs, id_col)
-        .join(F.broadcast(probes.select("query_id", "cell")), "cell")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select("query_id", id_col)
-    )
-
-    m = sum(1 for c in codes.columns if c.startswith("code"))
-    # quantize the SAME query frame the routing used (rename back to
-    # the store's column names) — one query-lookup scan, not two
-    qquant = _pq_quantize(
-        qdf.select(
-            F.col("query_id").alias(id_col), F.col("qv").alias(vec_col)
-        ),
-        id_col,
-        vec_col,
-    )
-    dtable = _adc_dtable(spark, base, qquant, id_col)
-    encoded = codes_slice.select(
-        id_col,
-        F.posexplode(F.array(*[F.col(f"code{s}") for s in range(m)])).alias(
-            "sub", "code"
-        ),
-    )
-    adc = (
-        cand.join(encoded, id_col)
-        .join(F.broadcast(dtable), ["query_id", "sub", "code"])
-        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
-        .agg(F.sum("d_e12").alias("adc_e12"))
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_e12", "neighbor_id")
-    return (
-        adc.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= topk)
-        .select("query_id", "neighbor_id", "adc_e12", "rk")
-    )
-
-
-def _member_qdf(
-    cells: DataFrame, query_ids: list[int], id_col: str, vec_col: str
-) -> DataFrame:
-    """Member-id query frame: look the query vectors up in the
-    inverted file itself (the convenience form; serving passes caller
-    vectors)."""
-    return cells.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-
-
-def _caller_qdf(queries: DataFrame) -> DataFrame:
-    """Caller-vector query frame: first column = query id, second =
-    query vector (the convention every *_vectors probe shares)."""
-    return queries.select(
-        F.col(queries.columns[0]).alias("query_id"),
-        F.col(queries.columns[1]).alias("qv"),
-    )
-
-
-def ann_index_probe_ivfpq(
-    spark: SparkSession,
-    index_dir: str,
-    query_ids: list[int],
-    topk: int = 5,
-    n_probe: int = 4,
-    version: str = "v1",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-PQ composite probe off the persisted store, member-id form
-    with static pruning — see `_probe_ivfpq_impl` for the shared plan.
-    vs `ann_index_probe_pq`, which ADC-scores the WHOLE code table by
-    design (the exhaustive-ADC twin): here both the candidate set AND
-    the code I/O are bounded to the ~n_probe/n_centroids cell slice,
-    pruned on disk (the round-12 layout gap — a full codes scan
-    semi-bounded only by the join — is closed by the cell-partitioned
-    codes layout).  The serving matrix: `_dpp` keeps routing off the
-    driver, `_vectors` takes caller-supplied query embeddings,
-    `_vectors_dpp` does both."""
-    base = _base(index_dir, version)
-    gen, tomb_gen, _ = _state(spark, base)
-    qdf = _member_qdf(
-        spark.read.parquet(_gen_dir(base, "cells", gen)),
-        query_ids,
-        id_col,
-        vec_col,
-    )
-    return _probe_ivfpq_impl(
-        spark, base, gen, tomb_gen, qdf, topk, n_probe, id_col, vec_col,
-        dpp=False,
-    )
-
-
-def ann_index_probe_ivfpq_dpp(
-    spark: SparkSession,
-    index_dir: str,
-    query_ids: list[int],
-    topk: int = 5,
-    n_probe: int = 4,
-    version: str = "v1",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-PQ probe, member-id form with DYNAMIC partition pruning:
-    the probe-cell set stays a DataFrame end-to-end and both the
-    inverted-file and codes scans carry a DynamicPruningExpression —
-    zero driver-side routing (no collect anywhere in the plan).
-    Byte-identical to `ann_index_probe_ivfpq` (pinned by test)."""
-    base = _base(index_dir, version)
-    gen, tomb_gen, _ = _state(spark, base)
-    qdf = _member_qdf(
-        spark.read.parquet(_gen_dir(base, "cells", gen)),
-        query_ids,
-        id_col,
-        vec_col,
-    )
-    return _probe_ivfpq_impl(
-        spark, base, gen, tomb_gen, qdf, topk, n_probe, id_col, vec_col,
-        dpp=True,
-    )
-
-
-def ann_index_probe_ivfpq_vectors(
-    spark: SparkSession,
-    index_dir: str,
-    queries: DataFrame,
-    topk: int = 5,
-    n_probe: int = 4,
-    version: str = "v1",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-PQ probe with CALLER-SUPPLIED query vectors (``queries`` =
-    (query_id, qv)) — the serving form: fresh query embeddings that
-    never lived in the index.  Member vectors passed externally give
-    byte-identical results to the member-id form (pinned by test)."""
-    base = _base(index_dir, version)
-    gen, tomb_gen, _ = _state(spark, base)
-    return _probe_ivfpq_impl(
-        spark, base, gen, tomb_gen, _caller_qdf(queries), topk, n_probe,
-        id_col, vec_col, dpp=False,
-    )
-
-
-def ann_index_probe_ivfpq_vectors_dpp(
-    spark: SparkSession,
-    index_dir: str,
-    queries: DataFrame,
-    topk: int = 5,
-    n_probe: int = 4,
-    version: str = "v1",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-PQ probe, caller vectors + dynamic partition pruning — the
-    full production serving shape: external query embeddings stay
-    distributed end-to-end and BOTH store scans (inverted file, codes)
-    prune via DynamicPruningExpression with zero driver routing.
-    Byte-identical to every other IVF-PQ form on the same queries."""
-    base = _base(index_dir, version)
-    gen, tomb_gen, _ = _state(spark, base)
-    return _probe_ivfpq_impl(
-        spark, base, gen, tomb_gen, _caller_qdf(queries), topk, n_probe,
-        id_col, vec_col, dpp=True,
     )

@@ -101,6 +101,7 @@ from ..storage.manifest import (
     local_rows_df as _local_rows,
     manifest_state as _state,
     max_files_per_leaf_dir as _max_files,
+    read_component as _read_component,
     read_parquet_pinned as _read_pinned,
     repartition_for_layout as _layout,
     reset_version_dir as _reset_version_dir,
@@ -115,6 +116,19 @@ from .dedup import lsh_band_keys, minhash_signatures
 _COMPONENTS = ("sigs", "bands")
 
 _META_DDL = "num_hashes int, bands int, shingle_n int"
+_BANDS_DDL = "doc_id long, key string, band int, pfx string"
+
+
+def _bands(spark: SparkSession, base: str, gen: int) -> DataFrame:
+    return _read_component(spark, _gen_dir(base, "bands", gen), _BANDS_DDL)
+
+
+def _sigs(spark: SparkSession, base: str, gen: int, num_hashes: int) -> DataFrame:
+    """The signature table at its fixed width (``num_hashes`` from
+    `_meta`; 0 reads the id column alone).  Band and sig reads run no
+    footer-inference job."""
+    cols = ["doc_id long"] + [f"h{i} long" for i in range(num_hashes)]
+    return _read_component(spark, _gen_dir(base, "sigs", gen), ", ".join(cols))
 
 
 def resolve_dedup_dirs(
@@ -220,7 +234,7 @@ def dedup_index_build(
         sigs.write.mode("overwrite").parquet(_gen_dir(base, "sigs", 0))
     finally:
         raw.unpersist()
-    return _band_manifest(spark.read.parquet(_gen_dir(base, "bands", 0)))
+    return _band_manifest(_bands(spark, base, 0))
 
 
 # ---------------------------------------------------------------------------
@@ -253,7 +267,7 @@ def dedup_index_probe(
         probe_docs, id_col, text_col, num_hashes, bands, shingle_n
     )
     try:
-        idx_bands = spark.read.parquet(_gen_dir(base, "bands", gen))
+        idx_bands = _bands(spark, base, gen)
         if prune:
             combos = pband.select("band", "pfx").distinct().collect()  # ≤ bands×16
             pred = None
@@ -283,7 +297,7 @@ def dedup_index_probe(
         tombs = _load_tombstones(spark, base, tomb_gen, "doc_id")
         cand = _anti_tombstones(cand, tombs, "index_id")
 
-        isigs = spark.read.parquet(_gen_dir(base, "sigs", gen))
+        isigs = _sigs(spark, base, gen, num_hashes)
         agree = sum(
             F.when(F.col(f"p.h{i}") == F.col(f"i.h{i}"), 1).otherwise(0)
             for i in range(num_hashes)
@@ -358,11 +372,7 @@ def dedup_index_append(
     # sigs-side scan can never catch an id this one misses — one
     # store-wide id-column scan saved per append (round 14; the
     # invariant is pinned by tests and audited by fsck ids_match)
-    live_ids = (
-        spark.read.parquet(_gen_dir(base, "bands", gen))
-        if assert_unique
-        else None
-    )
+    live_ids = _bands(spark, base, gen) if assert_unique else None
 
     sigs, banded, raw = _banded(
         new_docs, id_col, text_col, num_hashes, bands, shingle_n
@@ -453,15 +463,15 @@ def dedup_index_compact(
     cleanly (its guard counts band-side ids as live until then).  The
     tombstone log is loaded once and reused by both rewrites."""
     base = _base(index_dir, version)
+    num_hashes, _, _ = _meta(spark, base)
     gen, tomb_gen, seq = _state(spark, base)
     new_gen = gen + 1
     tombs = _load_tombstones(spark, base, tomb_gen, "doc_id")
 
-    bands_live = _anti_tombstones(
-        spark.read.parquet(_gen_dir(base, "bands", gen)), tombs, "doc_id"
-    )
+    bands = _bands(spark, base, gen)
+    bands_live = _anti_tombstones(bands, tombs, "doc_id")
     sigs_live = _anti_tombstones(
-        spark.read.parquet(_gen_dir(base, "sigs", gen)), tombs, "doc_id"
+        _sigs(spark, base, gen, num_hashes), tombs, "doc_id"
     )
     # torn-append heal: keep only ids covered by BOTH halves (co-keyed
     # semi-joins on doc_id — one extra shuffle each, amortized like the
@@ -470,11 +480,7 @@ def dedup_index_compact(
         sigs_live.select("doc_id").distinct(), "doc_id", "semi"
     )
     sigs_whole = sigs_live.join(
-        spark.read.parquet(_gen_dir(base, "bands", gen))
-        .select("doc_id")
-        .distinct(),
-        "doc_id",
-        "semi",
+        bands.select("doc_id").distinct(), "doc_id", "semi"
     )
     # both rewrites land in the UNCOMMITTED new generation (the
     # manifest append below is the atomic flip — intra-generation write
@@ -498,9 +504,7 @@ def dedup_index_compact(
         spark, base, seq, new_gen, tomb_gen, new_dirs, "dedup_index_compact"
     )
 
-    return _band_manifest(
-        spark.read.parquet(_gen_dir(base, "bands", new_gen))
-    )
+    return _band_manifest(_bands(spark, base, new_gen))
 
 
 def dedup_index_gc(
@@ -552,8 +556,8 @@ def dedup_index_maintain(
     compact when triggered."""
     base = _base(index_dir, version)
     gen, tomb_gen, _ = _state(spark, base)
-    sigs_ids = spark.read.parquet(_gen_dir(base, "sigs", gen)).select("doc_id")
-    band_ids = spark.read.parquet(_gen_dir(base, "bands", gen)).select("doc_id")
+    sigs_ids = _sigs(spark, base, gen, 0)
+    band_ids = _bands(spark, base, gen).select("doc_id")
     # orphan ids (torn-append detector) + distinct doc count in ONE job
     sides = sigs_ids.select(
         "doc_id", F.lit(1).alias("_s"), F.lit(0).alias("_b")
@@ -631,8 +635,8 @@ def dedup_index_fsck(
     base = _base(index_dir, version)
     _, bands_n, _ = _meta(spark, base)
     gen, _, _ = _state(spark, base)
-    sigs = spark.read.parquet(_gen_dir(base, "sigs", gen)).select("doc_id")
-    bnd = spark.read.parquet(_gen_dir(base, "bands", gen))
+    sigs = _sigs(spark, base, gen, 0)
+    bnd = _bands(spark, base, gen)
 
     n_sig_docs = sigs.distinct().count()
     bdocs = bnd.select("doc_id").distinct()
@@ -683,7 +687,7 @@ def dedup_index_manifest(
     read back from disk through the generation resolver."""
     base = _base(index_dir, version)
     gen, _, _ = _state(spark, base)
-    return _band_manifest(spark.read.parquet(_gen_dir(base, "bands", gen)))
+    return _band_manifest(_bands(spark, base, gen))
 
 
 # ---------------------------------------------------------------------------
@@ -698,7 +702,7 @@ def dedup_index_stats(
     LSH self-join quadratic; production dedup services alert on it)."""
     base = _base(index_dir, version)
     gen, tomb_gen, _ = _state(spark, base)
-    bands_df = spark.read.parquet(_gen_dir(base, "bands", gen))
+    bands_df = _bands(spark, base, gen)
     tombs = _load_tombstones(spark, base, tomb_gen, "doc_id")
     live = _anti_tombstones(bands_df, tombs, "doc_id")
 

@@ -15626,9 +15626,9 @@ def ann_index_build_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_index_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Probe the PERSISTED index — no rebuild: centroid table read from
-    parquet, inverted file pruned to the probed cell directories (static
-    PartitionFilters), exact cosine re-rank.  Byte-identical to the
-    fused ivf_topk (pinned by tests/test_ann_index.py)."""
+    parquet, inverted file pruned to the probed cell directories
+    (dynamic partition pruning), exact cosine re-rank.  Byte-identical
+    to the fused ivf_topk (pinned by tests/test_ann_index.py)."""
     import tempfile
 
     from .operators import ann_index
@@ -15676,7 +15676,7 @@ _ANNIDX_FILTER_QUERY_IDS = [9, 10, 11]
     """,
 )
 def ann_index_probe_filtered_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Filtered ANN probe (ann_index.ann_index_probe_filtered) — the
+    """Filtered ANN probe (ann_index.ann_index_probe with ``allowed``) — the
     metadata-predicate + vector-search retrieval shape: candidates from
     the probed cells semi-join the allowed-id set (here vec_id % 3 = 0,
     standing in for any metadata predicate) BEFORE the cosine re-rank
@@ -15694,9 +15694,9 @@ def ann_index_probe_filtered_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_centroids=_IVF_CENTROIDS, m=_PQ_M, k_codes=_PQ_K,
         ).collect()
         allowed = emb.filter(F.col("vec_id") % 3 == 0).select("vec_id")
-        out = ann_index.ann_index_probe_filtered(
-            spark, f"{tmp}/annidx", _ANNIDX_FILTER_QUERY_IDS, allowed,
-            k=_IVF_K, n_probe=_IVF_PROBE,
+        out = ann_index.ann_index_probe(
+            spark, f"{tmp}/annidx", _ANNIDX_FILTER_QUERY_IDS,
+            k=_IVF_K, n_probe=_IVF_PROBE, allowed=allowed,
         )
         return out.localCheckpoint(eager=True)
 
@@ -15704,12 +15704,12 @@ def ann_index_probe_filtered_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("ann_index_probe_vectors_filtered", _ORACLES["ann_index_probe_filtered"])
 def ann_index_probe_vectors_filtered_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered ANN probe with CALLER-SUPPLIED query vectors
-    (ann_index.ann_index_probe_vectors_filtered — round 12): the
-    metadata-predicate retrieval shape for the true serving case, where
-    query embeddings arrive from outside the index.  Here member
-    vectors are passed as an external (query_id, qv) frame so the
+    (ann_index.ann_index_probe given a (query_id, qv) frame and
+    ``allowed``): the metadata-predicate retrieval shape for the true
+    serving case, where query embeddings arrive from outside the index.
+    Here member vectors are passed as an external frame so the
     member-id oracle replays verbatim — results are byte-identical to
-    ann_index_probe_filtered on the same queries (also pinned by
+    the member-id filtered probe on the same queries (also pinned by
     tests/test_ann_index.py)."""
     import tempfile
 
@@ -15725,9 +15725,9 @@ def ann_index_probe_vectors_filtered_q(spark: SparkSession, sf_dir: str) -> Data
         qdf = emb.filter(
             F.col("vec_id").isin(_ANNIDX_FILTER_QUERY_IDS)
         ).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
-        out = ann_index.ann_index_probe_vectors_filtered(
-            spark, f"{tmp}/annidx", qdf, allowed,
-            k=_IVF_K, n_probe=_IVF_PROBE,
+        out = ann_index.ann_index_probe(
+            spark, f"{tmp}/annidx", qdf,
+            k=_IVF_K, n_probe=_IVF_PROBE, allowed=allowed,
         )
         return out.localCheckpoint(eager=True)
 
@@ -15763,126 +15763,6 @@ def ann_index_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()
         ann_index.ann_index_delete(spark, idx, list(range(100, 150))).collect()
         out = ann_index.ann_index_stats(spark, idx)
-        return out.localCheckpoint(eager=True)
-
-
-_ANNIDX_DPP_QUERY_IDS = [6, 7, 8]
-
-
-@register(
-    "ann_index_probe_dpp",
-    "WITH "
-    + _annidx_assign_sql()
-    + f""",
-    probes AS (
-      SELECT query_id, qv, cell FROM (
-        SELECT vec_id AS query_id, v AS qv, centroid_id AS cell,
-               row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, centroid_id) AS rk
-        FROM scored WHERE vec_id IN ({', '.join(map(str, _ANNIDX_DPP_QUERY_IDS))})) WHERE rk <= {_IVF_PROBE}
-    ), cand AS (
-      SELECT p.query_id, a.vec_id AS neighbor_id,
-             ROUND(list_cosine_similarity(p.qv, a.v), 4) AS cos
-      FROM assigned a JOIN probes p ON a.cell = p.cell
-      WHERE a.vec_id <> p.query_id
-    )
-    SELECT query_id, neighbor_id, cos, rk FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-      FROM cand) WHERE rk <= {_IVF_K}
-    """,
-)
-def ann_index_probe_dpp_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DPP probe (ann_index.ann_index_probe_dpp): the probe-cell set
-    stays a DATAFRAME end-to-end and the cell-partitioned inverted-file
-    scan is pruned by a DynamicPruningExpression fed from the reused
-    broadcast of the probe side — zero driver-side routing (the static
-    probe collects a |Q| x n_probe cell list; this variant is the
-    offline-mega-batch form where even that should not transit the
-    driver).  Byte-identical to ann_index_probe on the same store
-    (pinned by tests/test_ann_index.py, which also asserts the
-    dynamicpruning node in the executed plan); the oracle is the same
-    IVF rule over the probed cells."""
-    import tempfile
-
-    from .operators import ann_index
-
-    with tempfile.TemporaryDirectory() as tmp:
-        ann_index.ann_index_build(
-            load(spark, sf_dir, "embeddings"),
-            f"{tmp}/annidx",
-            n_centroids=_IVF_CENTROIDS,
-            m=_PQ_M,
-            k_codes=_PQ_K,
-        ).collect()
-        out = ann_index.ann_index_probe_dpp(
-            spark,
-            f"{tmp}/annidx",
-            _ANNIDX_DPP_QUERY_IDS,
-            k=_IVF_K,
-            n_probe=_IVF_PROBE,
-        )
-        return out.localCheckpoint(eager=True)
-
-
-_ANNIDX_VDPP_QUERY_IDS = [21, 22, 23]
-
-
-@register(
-    "ann_index_probe_vectors_dpp",
-    "WITH "
-    + _annidx_assign_sql()
-    + f""",
-    probes AS (
-      SELECT query_id, qv, cell FROM (
-        SELECT vec_id AS query_id, v AS qv, centroid_id AS cell,
-               row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, centroid_id) AS rk
-        FROM scored WHERE vec_id IN ({', '.join(map(str, _ANNIDX_VDPP_QUERY_IDS))})) WHERE rk <= {_IVF_PROBE}
-    ), cand AS (
-      SELECT p.query_id, a.vec_id AS neighbor_id,
-             ROUND(list_cosine_similarity(p.qv, a.v), 4) AS cos
-      FROM assigned a JOIN probes p ON a.cell = p.cell
-      WHERE a.vec_id <> p.query_id
-    )
-    SELECT query_id, neighbor_id, cos, rk FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-      FROM cand) WHERE rk <= {_IVF_K}
-    """,
-)
-def ann_index_probe_vectors_dpp_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Caller-vector DPP probe (ann_index.ann_index_probe_vectors_dpp —
-    round-12 verdict task 2): the TRUE serving case, where query
-    vectors arrive from outside the index (here: member vectors passed
-    as an external (query_id, qv) DataFrame so the oracle can replay
-    them), kept distributed end-to-end — the inverted-file scan is
-    pruned by a DynamicPruningExpression fed from the broadcast probe
-    side, with zero driver-side routing (the static
-    ann_index_probe_vectors collects a |Q| x n_probe cell list).
-    Byte-identical to ann_index_probe_vectors on the same queries
-    (pinned by tests/test_ann_index.py, which also asserts the
-    dynamicpruning node and the absence of CollectLimit in the
-    executed plan)."""
-    import tempfile
-
-    from .operators import ann_index
-
-    emb = load(spark, sf_dir, "embeddings")
-    with tempfile.TemporaryDirectory() as tmp:
-        ann_index.ann_index_build(
-            emb,
-            f"{tmp}/annidx",
-            n_centroids=_IVF_CENTROIDS,
-            m=_PQ_M,
-            k_codes=_PQ_K,
-        ).collect()
-        qdf = emb.filter(F.col("vec_id").isin(_ANNIDX_VDPP_QUERY_IDS)).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-        )
-        out = ann_index.ann_index_probe_vectors_dpp(
-            spark,
-            f"{tmp}/annidx",
-            qdf,
-            k=_IVF_K,
-            n_probe=_IVF_PROBE,
-        )
         return out.localCheckpoint(eager=True)
 
 
@@ -15967,85 +15847,13 @@ def ann_index_probe_ivfpq_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.localCheckpoint(eager=True)
 
 
-@register("ann_index_probe_ivfpq_dpp", _ORACLES["ivf_pq_topk"])
-def ann_index_probe_ivfpq_dpp_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ probe with DYNAMIC partition pruning
-    (ann_index.ann_index_probe_ivfpq_dpp — round-13 verdict task 2):
-    the probe-cell set stays a DataFrame end-to-end and BOTH
-    partitioned store scans (inverted file + the round-13
-    cell-partitioned codes) carry a DynamicPruningExpression — zero
-    driver-side routing, completing the DPP row of the serving matrix
-    for the composite probe.  Byte-identical to ann_index_probe_ivfpq
-    (pinned by tests/test_ann_index.py, which also asserts the
-    dynamicpruning node on BOTH scans); the oracle IS ivf_pq_topk's
-    composed IVF+ADC replay."""
-    import tempfile
-
-    from .operators import ann_index
-
-    with tempfile.TemporaryDirectory() as tmp:
-        ann_index.ann_index_build(
-            load(spark, sf_dir, "embeddings"),
-            f"{tmp}/annidx",
-            n_centroids=_IVFPQ_CENTROIDS,
-            m=_PQ_M,
-            k_codes=_PQ_K,
-        ).collect()
-        out = ann_index.ann_index_probe_ivfpq_dpp(
-            spark,
-            f"{tmp}/annidx",
-            _ANN_QUERY_IDS,
-            topk=5,
-            n_probe=_IVFPQ_PROBE,
-        )
-        return out.localCheckpoint(eager=True)
-
-
 @register("ann_index_probe_ivfpq_vectors", _ORACLES["ivf_pq_topk"])
 def ann_index_probe_ivfpq_vectors_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ probe with CALLER-SUPPLIED query vectors
-    (ann_index.ann_index_probe_ivfpq_vectors — round-13 verdict task
-    2): the serving form, where query embeddings arrive from outside
-    the index (here: member vectors passed as an external (query_id,
-    qv) DataFrame so the oracle can replay them).  Byte-identical to
-    the member-id ann_index_probe_ivfpq on the same queries (pinned by
-    tests/test_ann_index.py)."""
-    import tempfile
-
-    from .operators import ann_index
-
-    emb = load(spark, sf_dir, "embeddings")
-    with tempfile.TemporaryDirectory() as tmp:
-        ann_index.ann_index_build(
-            emb,
-            f"{tmp}/annidx",
-            n_centroids=_IVFPQ_CENTROIDS,
-            m=_PQ_M,
-            k_codes=_PQ_K,
-        ).collect()
-        qdf = emb.filter(F.col("vec_id").isin(_ANN_QUERY_IDS)).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-        )
-        out = ann_index.ann_index_probe_ivfpq_vectors(
-            spark,
-            f"{tmp}/annidx",
-            qdf,
-            topk=5,
-            n_probe=_IVFPQ_PROBE,
-        )
-        return out.localCheckpoint(eager=True)
-
-
-@register("ann_index_probe_ivfpq_vectors_dpp", _ORACLES["ivf_pq_topk"])
-def ann_index_probe_ivfpq_vectors_dpp_q(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """IVF-PQ probe, caller vectors + dynamic partition pruning
-    (ann_index.ann_index_probe_ivfpq_vectors_dpp — round-13 verdict
-    task 2): the full production serving shape for the composite probe
-    — external query embeddings stay distributed end-to-end, and both
-    store scans prune via DynamicPruningExpression with zero driver
-    routing.  Byte-identical to every other IVF-PQ form on the same
+    (ann_index.ann_index_probe_ivfpq given a (query_id, qv) frame): the
+    serving form, where query embeddings arrive from outside the index
+    (here: member vectors passed as an external frame so the oracle can
+    replay them).  Byte-identical to the member-id form on the same
     queries (pinned by tests/test_ann_index.py)."""
     import tempfile
 
@@ -16063,7 +15871,7 @@ def ann_index_probe_ivfpq_vectors_dpp_q(
         qdf = emb.filter(F.col("vec_id").isin(_ANN_QUERY_IDS)).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
         )
-        out = ann_index.ann_index_probe_ivfpq_vectors_dpp(
+        out = ann_index.ann_index_probe_ivfpq(
             spark,
             f"{tmp}/annidx",
             qdf,
@@ -16629,9 +16437,9 @@ _ANNIDX_STREAM_QUERY_IDS = list(range(10, 22))
 )
 def streaming_ann_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN serving path: a STREAM of query vectors probed per
-    micro-batch against the persisted index
-    (ann_index.ann_index_probe_vectors inside foreachBatch) — the index
-    is built once and reused across batches, results append to a sink.
+    micro-batch against the persisted index (ann_index.ann_index_probe
+    on each batch frame, inside foreachBatch) — the index is built
+    once and reused across batches, results append to a sink.
     Two single-file micro-batches of 6 queries each; the oracle is the
     batch IVF rule over all 12, so a dropped batch, a rebuilt index,
     or a drifted probe flips the hash."""
@@ -16660,7 +16468,7 @@ def streaming_ann_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         out_dir = f"{tmp}/results"
 
         def probe_batch(batch_df, batch_id):
-            ann_index.ann_index_probe_vectors(
+            ann_index.ann_index_probe(
                 spark,
                 f"{tmp}/annidx",
                 batch_df,
@@ -16909,7 +16717,7 @@ def streaming_ann_serving_under_deletes_q(spark: SparkSession, sf_dir: str) -> D
                 ann_index.ann_index_delete(
                     spark, idx, list(range(_ANNSRV_D2[0], _ANNSRV_D2[1] + 1))
                 ).collect()
-            out = ann_index.ann_index_probe_vectors(
+            out = ann_index.ann_index_probe(
                 spark, idx, batch_df.select("query_id", "qv"),
                 k=_IVF_K, n_probe=_IVF_PROBE,
             )

@@ -10,7 +10,8 @@ consume, pinned by its own unit tests (tests/test_storage_manifest.py),
 not only transitively through the stores.
 
 The three indexes also share one copy of the generation-store toolkit:
-directory names (`gen_dir`, `tomb_dir`), the LSM delete log
+directory names (`gen_dir`, `tomb_dir`), fixed-schema component reads
+(`read_parquet_pinned`, `read_component`), the LSM delete log
 (`load_tombstones`, `anti_tombstones`, `append_tombstones`,
 `count_tombstones`), the append id guard (`guard_hits`), the compact
 commit (`commit_generation`) and reclamation (`gc_generations`,
@@ -87,7 +88,9 @@ def try_read_parquet(spark: SparkSession, path: str) -> DataFrame | None:
     `verify_readable`, where a file-less directory must read as None.
     Every store state with a fixed schema (manifests, _meta, tombstone
     logs, retention watermarks, index components) is read through
-    `read_parquet_pinned`, which runs no job."""
+    `read_parquet_pinned`, which runs no job.  The ANN ``codes`` read
+    infers too (its width is the codebook's), but never returns None,
+    so it calls ``spark.read.parquet`` directly."""
     from pyspark.errors import AnalysisException
 
     try:
@@ -114,6 +117,16 @@ def read_parquet_pinned(
     if not p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p):
         return None
     return spark.read.schema(schema_ddl).parquet(path)
+
+
+def read_component(spark: SparkSession, path: str, schema_ddl: str) -> DataFrame:
+    """`read_parquet_pinned` for a component every committed generation
+    holds: a missing directory means there is no store at that path and
+    raises FileNotFoundError."""
+    df = read_parquet_pinned(spark, path, schema_ddl)
+    if df is None:
+        raise FileNotFoundError(f"no store component at {path}")
+    return df
 
 
 def fs_delete(spark: SparkSession, path: str) -> None:

@@ -7,14 +7,21 @@ build-once / probe-many contract.
   fused similarity.pq_adc_topk
 - a second probe runs WITHOUT rebuild (the index dir is read-only after
   build) and returns the same result
-- the probe's inverted-file scan prunes cell partitions ON DISK
-  (PartitionFilters in the scan, not a post-scan filter)
+- the inverted file prunes cell partitions ON DISK (a partition filter
+  on the scan, not a post-scan filter)
+- every probe form (member ids or a caller frame, with or without an
+  allowed set; IVF and IVF-PQ) is routed by dynamic partition pruning:
+  a DynamicPruningExpression on the cells (and codes) scan, no job
+  before the result is collected, tombstoned ids excluded, and a warm
+  probe runs no schema-inference job on a fixed-schema component
 - version keys isolate: v1 and v2 coexist under one index_dir
 """
 
 from __future__ import annotations
 
+import itertools
 import os
+import re
 import stat
 
 import pytest
@@ -209,7 +216,7 @@ def test_probe_vectors_external_query(spark, built):
     queries = spark.createDataFrame(
         [(100000, qv)], "query_id long, qv array<float>"
     )
-    out = ann_index.ann_index_probe_vectors(spark, idx, queries, k=5, n_probe=4)
+    out = ann_index.ann_index_probe(spark, idx, queries, k=5, n_probe=4)
     rows = out.collect()
     assert len(rows) == 5
     assert all(r["query_id"] == 100000 for r in rows)
@@ -315,35 +322,8 @@ def test_delete_tombstones_then_compact_reclaims(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Round 11: DPP probe, manifest-commit compaction, append id guard
+# Round 11: manifest-commit compaction, append id guard
 # ---------------------------------------------------------------------------
-def test_probe_dpp_byte_identical_and_dynamic_pruning(spark, built):
-    """The DPP probe keeps the probe-cell set as a DataFrame: results
-    are byte-identical to the static probe AND the executed plan prunes
-    the inverted-file scan through a DynamicPruningExpression (no
-    driver-collected routing list anywhere in the path)."""
-    idx, _ = built
-    static = sorted(
-        map(tuple, ann_index.ann_index_probe(spark, idx, QIDS, k=5, n_probe=4).collect())
-    )
-    dpp_df = ann_index.ann_index_probe_dpp(spark, idx, QIDS, k=5, n_probe=4)
-    plan = dpp_df._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower()
-    assert sorted(map(tuple, dpp_df.collect())) == static
-
-
-def test_probe_dpp_respects_tombstones(spark, tmp_path):
-    idx = str(tmp_path / "idx")
-    emb = load(spark, SF, "embeddings")
-    ann_index.ann_index_build(emb, idx)
-    dead = list(range(50, 90))
-    ann_index.ann_index_delete(spark, idx, dead)
-    out = ann_index.ann_index_probe_dpp(spark, idx, QIDS).collect()
-    assert out and not any(r["neighbor_id"] in dead for r in out)
-    static = ann_index.ann_index_probe(spark, idx, QIDS).collect()
-    assert sorted(map(tuple, out)) == sorted(map(tuple, static))
-
-
 def test_compact_crash_before_commit_leaves_old_generation(spark, tmp_path, monkeypatch):
     """Crash-mid-compact: if the job dies at ANY point before the single
     manifest append (here: the commit itself fails), probes keep serving
@@ -452,15 +432,15 @@ def test_probe_filtered_respects_predicate_and_matches_unfiltered(spark, built):
     idx, _ = built
     emb = load(spark, SF, "embeddings")
     allowed = emb.filter(F.col("vec_id") % 3 == 0).select("vec_id")
-    out = ann_index.ann_index_probe_filtered(
-        spark, idx, QIDS, allowed, k=5, n_probe=4
+    out = ann_index.ann_index_probe(
+        spark, idx, QIDS, k=5, n_probe=4, allowed=allowed
     ).collect()
     assert len(out) == 15
     assert all(r["neighbor_id"] % 3 == 0 for r in out)
     # superset predicate -> identical to the plain probe
     every = emb.select("vec_id")
-    full = ann_index.ann_index_probe_filtered(
-        spark, idx, QIDS, every, k=5, n_probe=4
+    full = ann_index.ann_index_probe(
+        spark, idx, QIDS, k=5, n_probe=4, allowed=every
     )
     plain = ann_index.ann_index_probe(spark, idx, QIDS, k=5, n_probe=4)
     assert sorted(map(tuple, full.collect())) == sorted(
@@ -476,8 +456,8 @@ def test_probe_filtered_excludes_tombstoned_even_if_allowed(spark, tmp_path):
     ann_index.ann_index_build(emb, idx)
     ann_index.ann_index_delete(spark, idx, list(range(90, 120)))
     allowed = emb.select("vec_id")  # everything allowed, incl. deleted
-    out = ann_index.ann_index_probe_filtered(
-        spark, idx, QIDS, allowed, k=500, n_probe=4
+    out = ann_index.ann_index_probe(
+        spark, idx, QIDS, k=500, n_probe=4, allowed=allowed
     ).collect()
     assert out and not any(90 <= r["neighbor_id"] < 120 for r in out)
 
@@ -616,47 +596,8 @@ def test_compact_to_empty_fails_fast_store_intact(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Round 12: caller-vector DPP probe + cache discipline
+# Round 12: cache discipline
 # ---------------------------------------------------------------------------
-def test_probe_vectors_dpp_byte_identical_and_zero_collect(spark, built):
-    """The caller-vector DPP probe keeps EXTERNAL query vectors
-    distributed end-to-end: byte-identical to ann_index_probe_vectors
-    on the same member vectors, the executed plan prunes the
-    inverted-file scan through a DynamicPruningExpression, and the
-    plan contains no CollectLimit / driver-routing stage."""
-    idx, _ = built
-    emb = load(spark, SF, "embeddings")
-    qdf = emb.filter(F.col("vec_id").isin(QIDS)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    static = sorted(
-        map(tuple, ann_index.ann_index_probe_vectors(spark, idx, qdf, k=5, n_probe=4).collect())
-    )
-    dpp_df = ann_index.ann_index_probe_vectors_dpp(spark, idx, qdf, k=5, n_probe=4)
-    plan = dpp_df._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower()
-    assert "collectlimit" not in plan.lower()
-    assert sorted(map(tuple, dpp_df.collect())) == static
-    # ... and agrees with the member-id DPP form on member queries
-    member = sorted(
-        map(tuple, ann_index.ann_index_probe_dpp(spark, idx, QIDS, k=5, n_probe=4).collect())
-    )
-    assert sorted(map(tuple, dpp_df.collect())) == member
-
-
-def test_probe_vectors_dpp_respects_tombstones(spark, tmp_path):
-    idx = str(tmp_path / "idx")
-    emb = load(spark, SF, "embeddings")
-    ann_index.ann_index_build(emb, idx)
-    dead = list(range(50, 90))
-    ann_index.ann_index_delete(spark, idx, dead)
-    qdf = emb.filter(F.col("vec_id").isin(QIDS)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    out = ann_index.ann_index_probe_vectors_dpp(spark, idx, qdf).collect()
-    assert out and not any(r["neighbor_id"] in dead for r in out)
-
-
 def test_lifecycle_leaves_cache_idle(spark, tmp_path):
     """Cache-discipline sweep (round-12 verdict task 7): after EVERY
     index verb returns and its result is consumed, no persisted RDD
@@ -674,9 +615,10 @@ def test_lifecycle_leaves_cache_idle(spark, tmp_path):
     steps = [
         ("build", lambda: ann_index.ann_index_build(base_df, idx).collect()),
         ("probe", lambda: ann_index.ann_index_probe(spark, idx, QIDS).collect()),
-        ("probe_vectors", lambda: ann_index.ann_index_probe_vectors(spark, idx, qdf).collect()),
-        ("probe_dpp", lambda: ann_index.ann_index_probe_dpp(spark, idx, QIDS).collect()),
-        ("probe_vectors_dpp", lambda: ann_index.ann_index_probe_vectors_dpp(spark, idx, qdf).collect()),
+        ("probe_frame", lambda: ann_index.ann_index_probe(spark, idx, qdf).collect()),
+        ("probe_allowed", lambda: ann_index.ann_index_probe(
+            spark, idx, QIDS, allowed=base_df.select("vec_id")).collect()),
+        ("probe_ivfpq", lambda: ann_index.ann_index_probe_ivfpq(spark, idx, qdf).collect()),
         ("probe_pq", lambda: ann_index.ann_index_probe_pq(spark, idx, QIDS).collect()),
         ("append", lambda: ann_index.ann_index_append(spark, new_df, idx).collect()),
         ("delete", lambda: ann_index.ann_index_delete(spark, idx, [100, 120]).collect()),
@@ -724,42 +666,6 @@ def test_probe_ivfpq_respects_tombstones(spark, tmp_path):
     assert out and not any(r["neighbor_id"] in dead for r in out)
 
 
-def test_probe_vectors_filtered_matches_member_form(spark, built):
-    """The caller-vector filtered probe equals the member-id filtered
-    probe when given the same member vectors externally."""
-    idx, _ = built
-    emb = load(spark, SF, "embeddings")
-    allowed = emb.filter(F.col("vec_id") % 3 == 0).select("vec_id")
-    member = sorted(
-        map(
-            tuple,
-            ann_index.ann_index_probe_filtered(
-                spark, idx, QIDS, allowed, k=5, n_probe=4
-            ).collect(),
-        )
-    )
-    qdf = emb.filter(F.col("vec_id").isin(QIDS)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    external = sorted(
-        map(
-            tuple,
-            ann_index.ann_index_probe_vectors_filtered(
-                spark, idx, qdf, allowed, k=5, n_probe=4
-            ).collect(),
-        )
-    )
-    assert external == member and member
-
-
-def _scan_line(plan: str, needle: str) -> str:
-    """The FileScan plan line whose Location contains `needle`."""
-    for line in plan.splitlines():
-        if "FileScan" in line and needle in line:
-            return line
-    raise AssertionError(f"no FileScan over {needle!r} in plan:\n{plan}")
-
-
 def test_codes_layout_partitioned_by_cell(spark, tmp_path):
     """Round-13 layout: the PQ codes share the inverted
     cell-partitioned layout through the WHOLE lifecycle — build,
@@ -792,51 +698,6 @@ def test_codes_layout_partitioned_by_cell(spark, tmp_path):
         map(tuple, ann_index.ann_index_probe_ivfpq(spark, idx, QIDS).collect())
     )
     assert before == after and after
-
-
-def test_ivfpq_serving_matrix_byte_identical(spark, built):
-    """The four IVF-PQ probe forms (member/caller x static/DPP) return
-    byte-identical rows; the DPP plans prune BOTH partitioned scans
-    (inverted file + codes) via DynamicPruningExpression with no
-    driver-collected routing."""
-    idx, _ = built
-    emb = load(spark, SF, "embeddings")
-    member = sorted(
-        map(
-            tuple,
-            ann_index.ann_index_probe_ivfpq(
-                spark, idx, QIDS, topk=5, n_probe=4
-            ).collect(),
-        )
-    )
-    qdf = emb.filter(F.col("vec_id").isin(QIDS)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    dpp_df = ann_index.ann_index_probe_ivfpq_dpp(spark, idx, QIDS, topk=5, n_probe=4)
-    vec_df = ann_index.ann_index_probe_ivfpq_vectors(spark, idx, qdf, topk=5, n_probe=4)
-    vecdpp_df = ann_index.ann_index_probe_ivfpq_vectors_dpp(
-        spark, idx, qdf, topk=5, n_probe=4
-    )
-    for df in (dpp_df, vec_df, vecdpp_df):
-        assert sorted(map(tuple, df.collect())) == member
-    assert member
-    for df in (dpp_df, vecdpp_df):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "dynamicpruning" in _scan_line(plan, "/cells").lower()
-        assert "dynamicpruning" in _scan_line(plan, "/codes").lower()
-
-
-def test_ivfpq_static_prunes_codes_scan_on_disk(spark, built):
-    """The static IVF-PQ probe's codes scan carries the probe-cell
-    PartitionFilters (code I/O pruned on disk, not post-scan) — the
-    round-12 verdict's named layout gap, closed."""
-    idx, _ = built
-    df = ann_index.ann_index_probe_ivfpq(spark, idx, QIDS, topk=5, n_probe=2)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    for loc in ("/cells", "/codes"):
-        line = _scan_line(plan, loc)
-        pf = line.split("PartitionFilters:")[1]
-        assert "cell" in pf[:120] and "IN" in pf[:200], (loc, line)
 
 
 def test_maintain_compacts_on_file_count_then_noops(spark, tmp_path):
@@ -890,3 +751,247 @@ def test_maintain_compacts_on_dead_ratio(spark, tmp_path):
     assert rec["action"] == "compacted" and "dead_ratio" in rec["reason"]
     stats = ann_index.ann_index_stats(spark, idx)
     assert stats.agg(F.sum("n_dead")).first()[0] == 0
+
+
+# ---------------------------------------------------------------------------
+# One probe path: every query shape routed by dynamic partition pruning
+# ---------------------------------------------------------------------------
+_DPP = re.compile(r"dynamicpruningexpression\(cell#\d+ IN dynamicpruning#\d+\)")
+_AUDIT = itertools.count()
+
+
+def _keep_all(vec_id):
+    return True
+
+
+def _keep_mod3(vec_id):
+    return vec_id % 3 == 0
+
+
+def _rerank(rows, keep, k=5):
+    """Rows of a (query_id, neighbor_id, cos, rk) frame restricted to
+    neighbours passing `keep` and re-ranked by the probe's own order
+    (cos desc, neighbor_id asc)."""
+    by_q: dict = {}
+    for r in rows:
+        if keep(r["neighbor_id"]):
+            by_q.setdefault(r["query_id"], []).append(r)
+    out = []
+    for q, rs in by_q.items():
+        rs.sort(key=lambda r: (-r["cos"], r["neighbor_id"]))
+        out += [(q, r["neighbor_id"], r["cos"], i + 1) for i, r in enumerate(rs[:k])]
+    return sorted(out)
+
+
+def _query_frame(emb):
+    return emb.filter(F.col("vec_id").isin(QIDS)).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    )
+
+
+@pytest.fixture(scope="module")
+def tombstoned(spark, tmp_path_factory):
+    """A full store whose delete log holds ids the undeleted probes
+    return (IVF top-2 overall and among multiples of 3, IVF-PQ top-2),
+    plus the fused references over the live corpus.  Dead ids are >= 16,
+    so the live corpus keeps every centroid and codebook seed and the
+    fused forms over it are the store's exact references."""
+    idx = str(tmp_path_factory.mktemp("annidx_dead") / "idx")
+    emb = load(spark, SF, "embeddings")
+    ann_index.ann_index_build(emb, idx).collect()
+
+    def ivf_candidates(corpus):  # every candidate of the probed cells
+        return similarity.ivf_topk(
+            corpus, QIDS, k=500, n_centroids=16, n_probe=4
+        ).collect()
+
+    def ivfpq(corpus):
+        return sorted(
+            map(
+                tuple,
+                similarity.ivf_pq_topk(
+                    corpus, QIDS, n_centroids=16, n_probe=4, m=4, k=16, topk=5
+                ).collect(),
+            )
+        )
+
+    cand = ivf_candidates(emb)
+    top2 = _rerank(cand, _keep_all, 2) + _rerank(cand, _keep_mod3, 2)
+    top2 += [r for r in ivfpq(emb) if r[3] <= 2]
+    dead = sorted({r[1] for r in top2 if r[1] >= 16})
+    ann_index.ann_index_delete(spark, idx, dead).collect()
+    live = emb.filter(~F.col("vec_id").isin(dead))
+    return {
+        "idx": idx,
+        "dead": set(dead),
+        "emb": emb,
+        "ivf": ivf_candidates(live),
+        "ivfpq": ivfpq(live),
+    }
+
+
+def _call_jobs(spark, fn):
+    """(fn's result, stage names of the Spark jobs it ran)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"ann-audit-{next(_AUDIT)}"
+    sc.setJobGroup(group, "ann probe job audit")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    names = [
+        info.name
+        for j in tracker.getJobIdsForGroup(group) or []
+        for s in tracker.getJobInfo(j).stageIds
+        if (info := tracker.getStageInfo(s)) is not None
+    ]
+    return out, names
+
+
+def _dynamically_pruned(df, component: str) -> bool:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return any(
+        "FileScan" in line and f"/{component}" in line and _DPP.search(line)
+        for line in plan.splitlines()
+    )
+
+
+@pytest.mark.parametrize("filtered", [False, True], ids=["all", "allowed"])
+@pytest.mark.parametrize("shape", ["ids", "frame"])
+def test_probe(spark, tombstoned, shape, filtered):
+    """Each IVF form equals the fused ivf_topk over the live corpus
+    (restricted to the allowed set and re-ranked when filtered), never
+    returns a tombstoned id, prunes the cells scan dynamically, and
+    runs no Spark job before its result is collected (no routing
+    collect)."""
+    t = tombstoned
+    queries = QIDS if shape == "ids" else _query_frame(t["emb"])
+    allowed = (
+        t["emb"].filter(F.col("vec_id") % 3 == 0).select("vec_id")
+        if filtered
+        else None
+    )
+    df, stages = _call_jobs(
+        spark,
+        lambda: ann_index.ann_index_probe(
+            spark, t["idx"], queries, k=5, n_probe=4, allowed=allowed
+        ),
+    )
+    assert stages == []
+    assert _dynamically_pruned(df, "cells")
+    got = sorted(map(tuple, df.collect()))
+    assert got == _rerank(t["ivf"], _keep_mod3 if filtered else _keep_all)
+    assert len(got) == 15 and not {r[1] for r in got} & t["dead"]
+
+
+def test_probe_dpp_byte_identical_and_dynamic_pruning(spark, built):
+    """On a store with no delete log the member-id probe keeps the
+    probe-cell set as a DataFrame: byte-identical to the fused
+    ivf_topk AND the cells scan is pruned through a
+    DynamicPruningExpression (no driver-collected routing list)."""
+    idx, _ = built
+    emb = load(spark, SF, "embeddings")
+    fused = sorted(
+        map(tuple, similarity.ivf_topk(emb, QIDS, k=5, n_centroids=16, n_probe=4).collect())
+    )
+    df = ann_index.ann_index_probe(spark, idx, QIDS, k=5, n_probe=4)
+    assert _dynamically_pruned(df, "cells")
+    assert sorted(map(tuple, df.collect())) == fused and fused
+
+
+def _store_with_dead_range(spark, tmp_path):
+    """A fresh default-built store with ids 50..89 tombstoned, and the
+    live corpus (dead ids are >= 16, so the centroid seeds survive)."""
+    idx = str(tmp_path / "idx")
+    emb = load(spark, SF, "embeddings")
+    ann_index.ann_index_build(emb, idx).collect()
+    dead = list(range(50, 90))
+    ann_index.ann_index_delete(spark, idx, dead).collect()
+    return idx, emb, set(dead), emb.filter(~F.col("vec_id").isin(dead))
+
+
+def test_probe_dpp_respects_tombstones(spark, tmp_path):
+    idx, _, dead, live = _store_with_dead_range(spark, tmp_path)
+    out = sorted(map(tuple, ann_index.ann_index_probe(spark, idx, QIDS).collect()))
+    assert out and not {r[1] for r in out} & dead
+    assert out == sorted(map(tuple, similarity.ivf_topk(live, QIDS).collect()))
+
+
+def test_probe_vectors_dpp_byte_identical_and_zero_collect(spark, built):
+    """External query vectors stay distributed end to end: the
+    caller-frame probe is byte-identical to the member-id probe on the
+    same member vectors, prunes the cells scan dynamically, has no
+    CollectLimit in its plan and runs no Spark job before collect."""
+    idx, _ = built
+    qdf = _query_frame(load(spark, SF, "embeddings"))
+    df, stages = _call_jobs(
+        spark, lambda: ann_index.ann_index_probe(spark, idx, qdf, k=5, n_probe=4)
+    )
+    assert stages == []
+    assert _dynamically_pruned(df, "cells")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "collectlimit" not in plan.lower()
+    member = sorted(
+        map(tuple, ann_index.ann_index_probe(spark, idx, QIDS, k=5, n_probe=4).collect())
+    )
+    assert sorted(map(tuple, df.collect())) == member and member
+
+
+def test_probe_vectors_dpp_respects_tombstones(spark, tmp_path):
+    idx, emb, dead, _ = _store_with_dead_range(spark, tmp_path)
+    out = ann_index.ann_index_probe(spark, idx, _query_frame(emb)).collect()
+    assert out and not {r["neighbor_id"] for r in out} & dead
+    member = ann_index.ann_index_probe(spark, idx, QIDS).collect()
+    assert sorted(map(tuple, out)) == sorted(map(tuple, member))
+
+
+@pytest.mark.parametrize("shape", ["ids", "frame"])
+def test_probe_ivfpq(spark, tombstoned, shape):
+    """Each IVF-PQ form equals the fused ivf_pq_topk over the live
+    corpus, never returns a tombstoned id, prunes BOTH the cells and
+    the codes scans dynamically, and before collect runs only the
+    codes read's schema inference."""
+    t = tombstoned
+    queries = QIDS if shape == "ids" else _query_frame(t["emb"])
+    df, stages = _call_jobs(
+        spark,
+        lambda: ann_index.ann_index_probe_ivfpq(
+            spark, t["idx"], queries, topk=5, n_probe=4
+        ),
+    )
+    assert all(n.startswith("parquet at") for n in stages), stages
+    assert _dynamically_pruned(df, "cells") and _dynamically_pruned(df, "codes")
+    got = sorted(map(tuple, df.collect()))
+    assert got == t["ivfpq"] and got
+    assert not {r[1] for r in got} & t["dead"]
+
+
+def test_warm_probe_job_budget(spark, tombstoned, monkeypatch):
+    """Job budget of a warm probe on a store with tombstones: no
+    footer-inference job on a fixed-schema component.  The IVF probe
+    runs none at all; the IVF-PQ probe runs exactly one, the codes read
+    (its width is the codebook's), and none once that read is given
+    its schema."""
+    idx = tombstoned["idx"]
+
+    def run(probe):
+        probe(spark, idx, QIDS).collect()  # warm
+        return _call_jobs(spark, lambda: probe(spark, idx, QIDS).collect())[1]
+
+    def inferred(stages):
+        return [n for n in stages if n.startswith("parquet at")]
+
+    ivf = run(ann_index.ann_index_probe)
+    assert ivf and not inferred(ivf), ivf
+    assert len(inferred(run(ann_index.ann_index_probe_ivfpq))) == 1
+    codes_ddl = "vec_id long, code0 int, code1 int, code2 int, code3 int, cell int"
+    monkeypatch.setattr(
+        ann_index,
+        "_codes",
+        lambda spark, base, gen: spark.read.schema(codes_ddl).parquet(
+            sm.gen_dir(base, "codes", gen)
+        ),
+    )
+    ivfpq = run(ann_index.ann_index_probe_ivfpq)
+    assert ivfpq and not inferred(ivfpq), ivfpq

@@ -11,6 +11,8 @@ sign-once / probe-at-ingest contract.
   old generation, unchanged
 - the probe path's band scan prunes (band, pfx) partitions ON DISK
   (numPartitions scan metric, not a post-scan filter)
+- a probe reads bands, sigs and _meta with their fixed schemas (no
+  footer-inference job)
 """
 
 from __future__ import annotations
@@ -90,9 +92,24 @@ def _fused_probe_rule(spark, min_agree):
 
 
 def test_probe_matches_fused_rule(spark, built):
+    """... and the probe reads every store component with its fixed
+    schema: no footer-inference (``parquet at``) job runs."""
     idx, _ = built
     probe_docs = load(spark, SF, "documents").filter("doc_id % 10 = 0")
-    got = dedup_index.dedup_index_probe(spark, probe_docs, idx, min_agree=4)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("dedup-probe-audit", "dedup probe job audit")
+    try:
+        got = dedup_index.dedup_index_probe(spark, probe_docs, idx, min_agree=4)
+    finally:
+        sc.setJobGroup(None, None)
+    stages = [
+        info.name
+        for j in tracker.getJobIdsForGroup("dedup-probe-audit") or []
+        for s in tracker.getJobInfo(j).stageIds
+        if (info := tracker.getStageInfo(s)) is not None
+    ]
+    assert stages and not [n for n in stages if n.startswith("parquet at")], stages
     want = _fused_probe_rule(spark, min_agree=4)
     assert _sorted(got) == _sorted(want)
     assert got.count() > 0  # the synthetic corpus has injected near-dups
